@@ -353,7 +353,6 @@ def main() -> None:
             print(f"{name}: {type(e).__name__}", file=sys.stderr)
         # Release per-query persisted stages: leaving them pinned
         # charges later queries for this query's cache memory.
-        spark.catalog.clearCache()
         release_session_pins()
 
     _emit(

@@ -94,12 +94,6 @@ def duck_shingle_hash_chain(wh: str, i_expr: str, k: int) -> str:
     return expr
 
 
-def spark_minhash(xs: str, i: int) -> str:
-    """Spark expr: i-th MinHash over BIGINT array expression ``xs``."""
-    a, b = MINHASH_COEFFS[i]
-    return f"array_min(transform({xs}, x -> ({a} * x + {b}) % {PRIME}))"
-
-
 def duck_minhash(xs: str, i: int) -> str:
     a, b = MINHASH_COEFFS[i]
     return f"list_min(list_transform({xs}, x -> ({a} * x + {b}) % {PRIME}))"

@@ -6,10 +6,23 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
+# Every frame persist_reused() pins is registered here and stays
+# cached until release_session_pins().  A pin cannot be freed by the
+# function that made it: most are read by lazy consumers (self-join
+# sides, two_phase_scan's ranged slicing) that only run when the
+# CALLER materializes the returned frame.  Neither `del` nor the
+# ContextCleaner frees a persisted frame — only an explicit unpersist
+# (or clearCache) does — so without the registry a long session (the
+# driver contract runs 272 queries in one) would accumulate
+# corpus-sized cached frames.  list.append is atomic under the GIL,
+# so pool threads may pin concurrently (rec_user_candidates).
+_SESSION_PINS: list[DataFrame] = []
+
+
 def persist_reused(df: DataFrame) -> DataFrame:
     """Persist AND materialize (one count job, now) a frame that
     multiple downstream branches read — self-join sides, verify
-    rejoins.
+    rejoins — and register it for :func:`release_session_pins`.
 
     Persist alone is not enough: broadcast exchanges evaluate eagerly
     in parallel driver threads, so both sides of a self-join start
@@ -22,29 +35,14 @@ def persist_reused(df: DataFrame) -> DataFrame:
     of OOMing; this is the stage checkpoint a production dedup
     pipeline would persist anyway."""
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _SESSION_PINS.append(out)
     out.count()
     return out
 
 
-# Frames persist_reused() inside a lazily-returned operator (e.g.
-# two_phase_scan's ranged slicing) cannot unpersist before the CALLER
-# materializes the output — so they register here, and harnesses
-# release them between queries.  spark.catalog.clearCache() also
-# clears them (same CacheManager), but long sessions that don't
-# clearCache (the driver contract runs 270 queries in one session)
-# would otherwise accumulate corpus-sized cached frames.
-_SESSION_PINS: list[DataFrame] = []
-
-
-def pin_until_release(df: DataFrame) -> DataFrame:
-    """persist_reused + register for :func:`release_session_pins`."""
-    out = persist_reused(df)
-    _SESSION_PINS.append(out)
-    return out
-
-
 def release_session_pins() -> None:
-    """Unpersist every frame pinned via :func:`pin_until_release`.
+    """Unpersist every frame pinned via :func:`persist_reused` since
+    the last release (frames a caller already unpersisted are a no-op).
 
     MUST only run after every DataFrame built since the last release
     has been fully materialized (collected/written).  This is a
@@ -112,6 +110,20 @@ def posexplode_nonempty(col):
     return F.posexplode_outer(col)
 
 
+# All unordered pairs (p1 < p2) of a sorted ``items`` array, as a SQL
+# expression (basket pairs in rec.py, co-supply edges in graph.py).
+# Explode it with explode_outer + IS NOT NULL instead of a plain
+# explode: the outer generator is exempt from InferFiltersFromGenerate,
+# so the pair array is built once per row instead of twice (see
+# explode_nonempty), and single-item rows (empty pair array) drop via
+# the null filter.
+PAIR_ARR = (
+    "flatten(transform(items, (x, i) -> "
+    "transform(slice(items, i + 2, size(items)), "
+    "y -> named_struct('p1', x, 'p2', y))))"
+)
+
+
 # spread()'s partition probe (df.rdd.getNumPartitions) runs the full
 # analyze→optimize→physical-plan pipeline per call; dedup/similarity
 # pipelines call spread() on the SAME fresh table scans dozens of times
@@ -138,8 +150,7 @@ _SPREAD_MEMO_MAX = 1024
 # parallelism × floor and the stage keeps every core.  Callers whose
 # per-row work runs in the JVM (codegen'd hash folds) do NOT pass a
 # floor — a JVM task's fixed cost is ~1 ms, so full width stays free
-# for them.  Conf-overridable (spark.graft.spread.minBytesPerTask) —
-# a real cluster with slower task dispatch would raise it.
+# for them.
 _SPREAD_PY_MIN_BYTES_PER_TASK = 16 * 1024
 
 
@@ -154,12 +165,6 @@ def _spread_width(
     if min_bytes_per_task is None:
         return parallelism
     try:
-        min_bytes = int(
-            df.sparkSession.conf.get(
-                "spark.graft.spread.minBytesPerTask",
-                str(min_bytes_per_task),
-            )
-        )
         raw = (
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
@@ -168,15 +173,13 @@ def _spread_width(
         size = raw if isinstance(raw, int) else int(str(raw))
     except Exception:
         return parallelism
-    if size <= 0 or min_bytes <= 0:
+    if size <= 0 or min_bytes_per_task <= 0:
         return parallelism
-    return max(1, min(parallelism, -(-size // min_bytes)))
+    return max(1, min(parallelism, -(-size // min_bytes_per_task)))
 
 
 def spread(
-    df: DataFrame,
-    n_input_partitions: int | None = None,
-    min_bytes_per_task: int | None = None,
+    df: DataFrame, min_bytes_per_task: int | None = None
 ) -> DataFrame:
     """Round-robin repartition to cluster parallelism before CPU-heavy
     per-row work (hashing, vector folds) — but ONLY when the input is
@@ -193,20 +196,10 @@ def spread(
     problem that no longer exists — so a frame already at (or past)
     the target width passes through untouched, keeping the dedup /
     similarity plans free of the round-robin Exchange (asserted in
-    tests/test_plan_audit.py).
-
-    ``n_input_partitions``: caller hint that skips the probe entirely
-    when the caller already knows the scan width.  Without it, the
-    probe result is memoized per analyzed plan (one physical-planning
-    pass per distinct plan per session instead of per call)."""
-    sc = df.sparkSession.sparkContext
-    parallelism = sc.defaultParallelism
-    n = n_input_partitions
-    if n is not None:
-        if n >= parallelism:
-            return df
-        width = _spread_width(df, parallelism, min_bytes_per_task)
-        return df if n >= width else df.repartition(width)
+    tests/test_plan_audit.py).  The probe result is memoized per
+    analyzed plan (one physical-planning pass per distinct plan per
+    session instead of per call)."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     try:
         # Keyed on (plan, floor): the same pruned scan may be spread
         # by a Python-stage caller (floored width) and a JVM caller

@@ -395,9 +395,7 @@ def two_phase_scan(
     (RangePartitioner maps equal keys to one partition), where the
     full-key window orders them; ranks are therefore unchanged.
     """
-    from hana_bq_beam_connector_spark.operators._common import (
-        pin_until_release,
-    )
+    from hana_bq_beam_connector_spark.operators._common import persist_reused
 
     sess = df.sparkSession
     n_slices = slices or int(
@@ -418,11 +416,9 @@ def two_phase_scan(
     # row).  persist_reused materializes once; every branch reads the
     # one slicing.  This is the same concurrent-branch trap SCALE.md
     # documents for self-joins.
-    # pin_until_release = persist_reused + session-pin registry, so
-    # sweep harnesses can unpersist between queries (a single query
-    # may call two_phase_scan twice — ts_outlier_mad — and a 270-
-    # query session would otherwise accumulate corpus-sized caches).
-    ranged = pin_until_release(
+    # The pin outlives this call (the output is lazy), so it is freed
+    # by release_session_pins between queries, never here.
+    ranged = persist_reused(
         df.repartitionByRange(n_slices, *keys).withColumn(
             "__slice", F.spark_partition_id()
         )

@@ -679,17 +679,6 @@ def _sub_slice(vec: str, s: str, sub_dim: int) -> str:
     return f"slice({vec}, {s} * {sub_dim} + 1, {sub_dim})"
 
 
-def _l2sq_fold(a: str, b: str) -> str:
-    """Spark expr: squared L2 distance fold between two equal-length
-    arrays — strict left fold in index order (deterministic IEEE)."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> "
-        f"(cast(x as double) - cast(y as double)) * "
-        f"(cast(x as double) - cast(y as double))), "
-        f"cast(0.0 as double), (acc, v) -> acc + v)"
-    )
-
-
 _PQ_MEMO_CAP = 64  # distinct (corpus, params) pairs per session
 
 

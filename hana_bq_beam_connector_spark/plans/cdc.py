@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hana_bq_beam_connector_spark.operators._common import persist_reused
+
 
 def apply_cdc(
     base: DataFrame,
@@ -76,10 +78,10 @@ def apply_cdc(
         # ambiguity check rides the SAME window pass as the selection:
         # a tie on (seq, op) is exactly "the next row in the ordered
         # partition carries the same (seq, op)", i.e. lead() == self —
-        # no second aggregation job.  The annotated delta is persisted
-        # so the eager check and the returned plan share one
-        # computation (delta-bounded; the ContextCleaner frees it once
-        # the snapshot frame is dropped).
+        # no second aggregation job.  The annotated delta is pinned
+        # (persist_reused) so the eager check and the returned plan
+        # share one computation (delta-bounded; freed by
+        # release_session_pins once the snapshot is materialized).
         w = Window.partitionBy(key).orderBy(
             F.col(seq_col).desc(), F.col(op_col).desc()
         )
@@ -90,7 +92,7 @@ def apply_cdc(
             (F.lead(top_key).over(w) == top_key).alias("_cdc_tie"),
         )
         if validate:
-            annotated = annotated.persist()
+            annotated = persist_reused(annotated)
             flags = annotated.agg(
                 F.max(
                     F.when(
@@ -131,10 +133,10 @@ def apply_cdc(
         # One aggregation job over the (persisted) delta decides both
         # error classes — multiple surviving U/I rows per key, and ops
         # outside the D/U/I domain (an unknown op acts as a silent
-        # delete: its key is touched but never re-added).  Persisting
-        # means the returned plan reuses this scan instead of
-        # re-deriving the delta.
-        changes = changes.persist()
+        # delete: its key is touched but never re-added).  Pinning
+        # (persist_reused) means the returned plan reuses this scan
+        # instead of re-deriving the delta.
+        changes = persist_reused(changes)
         flags = (
             changes.groupBy(key)
             .agg(

@@ -29,14 +29,6 @@ def sum_dec_as_double(col: str | Column, alias: str) -> Column:
     return F.sum(c).cast("double").alias(alias)
 
 
-def avg_dec_as_double(col: str | Column, alias: str) -> Column:
-    """Exact decimal sum divided by exact count — one IEEE division."""
-    c = dec(col) if isinstance(col, str) else col
-    target = col if isinstance(col, str) else None
-    count = F.count(F.col(target)) if target else F.count(F.lit(1))
-    return (F.sum(c).cast("double") / count).alias(alias)
-
-
 _EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
 
@@ -103,10 +95,3 @@ def events_us(
 # Oracle-side fragments (kept next to their Spark twins above).
 def SQL_SUM_DEC(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) AS {alias}"
-
-
-def SQL_AVG_DEC(expr: str, alias: str) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) / "
-        f"COUNT({expr}) AS {alias}"
-    )

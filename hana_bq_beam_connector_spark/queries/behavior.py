@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hana_bq_beam_connector_spark.operators._common import persist_reused
 from hana_bq_beam_connector_spark.queries import register
 from hana_bq_beam_connector_spark.queries._util import (
     SQL_SUM_DEC,
@@ -312,11 +313,10 @@ def ts_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = pts.withColumn(
         "day_us", F.col("ts_us") - F.col("ts_us") % _DAY_US
     )
-    # Both the in-day window and the day-totals branch read pts:
-    # persist + materialize so the session build runs once, not twice
-    # (same pattern as the dedup self-joins).
-    pts = pts.persist()
-    pts.count()
+    # Both the in-day window and the day-totals branch read pts: pin
+    # so the session build runs once, not twice (same pattern as the
+    # dedup self-joins).
+    pts = persist_reused(pts)
     w_in = Window.partitionBy("day_us").orderBy(
         F.col("ts_us"), F.col("delta").desc()
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)

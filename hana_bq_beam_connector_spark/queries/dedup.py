@@ -682,15 +682,13 @@ def dedup_incremental_vs_corpus(
 def dedup_semantic_not_lexical(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from hana_bq_beam_connector_spark.operators._common import (
-        pin_until_release,
-    )
+    from hana_bq_beam_connector_spark.operators._common import persist_reused
     from hana_bq_beam_connector_spark.operators.dedup import (
         embedding_near_dup_pairs,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    pairs = pin_until_release(
+    pairs = persist_reused(
         embedding_near_dup_pairs(
             e, dim=64, threshold=0.4, n_planes="auto",
             target_bucket_size=64,
@@ -1024,9 +1022,7 @@ def dedup_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "regression here means the banding parameters drifted.",
 )
 def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hana_bq_beam_connector_spark.operators._common import (
-        pin_until_release,
-    )
+    from hana_bq_beam_connector_spark.operators._common import persist_reused
     from hana_bq_beam_connector_spark.operators.dedup import (
         band_table,
         minhash_signature,
@@ -1066,7 +1062,7 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_panel = F.col("doc_id") % k_div == 0
     in_block = F.col("doc_id") % b_div == b_div - 1
     universe = d.where(in_panel | in_block)
-    hashed = pin_until_release(
+    hashed = persist_reused(
         shingle_hashes(
             universe.select("doc_id", "lang", "text"), "text", 3
         ).select("doc_id", "lang", "shingle_hashes")
@@ -1115,7 +1111,7 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe shape).  Identical pair set, O(panel x block collisions)
     # join work.
     sig = minhash_signature(hashed)
-    banded = pin_until_release(band_table(sig, "doc_id"))
+    banded = persist_reused(band_table(sig, "doc_id"))
     ba = banded.where(F.col("doc_id") % k_div == 0).select(
         F.col("doc_id").alias("id_a"), "band_idx", "band_hash"
     )

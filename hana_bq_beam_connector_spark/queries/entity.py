@@ -27,9 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hana_bq_beam_connector_spark.operators._common import (
-    pin_until_release,
-)
+from hana_bq_beam_connector_spark.operators._common import persist_reused
 from hana_bq_beam_connector_spark.operators.entity import (
     blocked_fuzzy_components,
 )
@@ -164,16 +162,16 @@ def er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # applyInPandas union-find lineage re-evaluates once per
     # consumer (stage profile r11 s4: the two heaviest stages of the
     # query were both the Python verify, run twice).  Both frames are
-    # vocabulary-sized — thousands of rows — so the pin is a few KB;
-    # pin_until_release because the consumers are lazy until the
-    # caller materializes the returned frame (guide §5).
-    names = pin_until_release(
+    # vocabulary-sized — thousands of rows — so the pin is a few KB
+    # (held until release_session_pins: the consumers are lazy until
+    # the caller materializes the returned frame, guide §5).
+    names = persist_reused(
         p.groupBy("p_brand", "noun", "p_name").agg(
             F.min("p_partkey").alias("node_id"),
             F.count(F.lit(1)).alias("n_parts"),
         )
     )
-    linked = pin_until_release(
+    linked = persist_reused(
         blocked_fuzzy_components(
             names,
             block_cols=["p_brand", "noun"],

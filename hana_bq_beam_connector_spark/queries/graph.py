@@ -65,7 +65,7 @@ def _cosupply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out bounded by suppliers-per-part (TPC-H: 4), the same
     volume the join produced.  A pathological mega-part is the
     salting/AQE case, exactly as for mega-baskets."""
-    from hana_bq_beam_connector_spark.queries.rec import _PAIR_ARR
+    from hana_bq_beam_connector_spark.operators._common import PAIR_ARR
 
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_quantity") >= _QTY_BAR
@@ -76,7 +76,7 @@ def _cosupply_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("l_suppkey")).alias("items"))
     )
     return (
-        psets.select(F.explode_outer(F.expr(_PAIR_ARR)).alias("pr"))
+        psets.select(F.explode_outer(F.expr(PAIR_ARR)).alias("pr"))
         .where(F.col("pr").isNotNull())
         .select(F.col("pr.p1").alias("src"), F.col("pr.p2").alias("dst"))
     )
@@ -224,7 +224,7 @@ def graph_reachability_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from hana_bq_beam_connector_spark.queries.rec import _PAIR_ARR
+    from hana_bq_beam_connector_spark.operators._common import PAIR_ARR
 
     # Basket-array reshape (r11, guide §2.4 — same move as the rec
     # family): ONE exchange by l_orderkey with in-agg dedup, then
@@ -238,7 +238,7 @@ def graph_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("items"))
     )
     pairs = (
-        baskets.select(F.explode_outer(F.expr(_PAIR_ARR)).alias("pr"))
+        baskets.select(F.explode_outer(F.expr(PAIR_ARR)).alias("pr"))
         .where(F.col("pr").isNotNull())
         .select("pr.p1", "pr.p2")
     )

@@ -32,6 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hana_bq_beam_connector_spark.operators._common import (
+    PAIR_ARR,
+    persist_reused,
+)
 from hana_bq_beam_connector_spark.queries import register
 from hana_bq_beam_connector_spark.sources.files import load_table
 
@@ -55,10 +59,6 @@ _N_BASKET_GUARD = 3_000_000_000  # N^2 must stay inside int64
 
 
 def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hana_bq_beam_connector_spark.operators._common import (
-        persist_reused,
-    )
-
     # Basket-array reshape (r11, guide §2.3/§2.4): ONE exchange by
     # l_orderkey with an in-agg collect_set replaces the former
     # distinct-(basket, item) frame that the pair build then
@@ -86,22 +86,9 @@ def _supp(baskets: DataFrame) -> DataFrame:
     )
 
 
-# All unordered in-basket pairs (p1 < p2) from the sorted item array.
-# explode_outer + IS NOT NULL instead of a plain explode: the outer
-# generator is exempt from InferFiltersFromGenerate, so the pair
-# array is built once per basket instead of twice (see
-# operators/_common.explode_nonempty), and single-item baskets (empty
-# pair array) drop via the null filter.
-_PAIR_ARR = (
-    "flatten(transform(items, (x, i) -> "
-    "transform(slice(items, i + 2, size(items)), "
-    "y -> named_struct('p1', x, 'p2', y))))"
-)
-
-
 def _pairs(baskets: DataFrame) -> DataFrame:
     return (
-        baskets.select(F.explode_outer(F.expr(_PAIR_ARR)).alias("pr"))
+        baskets.select(F.explode_outer(F.expr(PAIR_ARR)).alias("pr"))
         .where(F.col("pr").isNotNull())
         .select("pr.p1", "pr.p2")
         .groupBy("p1", "p2")
@@ -243,10 +230,6 @@ _SQL_NEIGHBORS = f"""
 
 
 def _neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hana_bq_beam_connector_spark.operators._common import (
-        persist_reused,
-    )
-
     b = _baskets(spark, sf_dir)
     supp = persist_reused(_supp(b))  # read twice (both join sides)
     sym = _sym(_pairs(b), "anchor", "neighbor")
@@ -420,11 +403,8 @@ def rec_also_bought_confidence(
 def rec_user_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
-    from hana_bq_beam_connector_spark.operators._common import (
-        persist_reused,
-    )
-
     o = load_table(spark, sf_dir, "orders")
+    # Pinned before the pool so both futures read its cache, not race.
     b = _baskets(spark, sf_dir)
     # owned rides the pinned basket frame (r11): join orders to the
     # per-order item array and explode, instead of re-scanning

@@ -31,13 +31,6 @@ def _duck_dot(a: str, b: str) -> str:
     )
 
 
-def _duck_cosine(a: str, b: str) -> str:
-    return (
-        f"{_duck_dot(a, b)} / "
-        f"(sqrt({_duck_dot(a, a)}) * sqrt({_duck_dot(b, b)}))"
-    )
-
-
 def _duck_unit_cte(name: str = "unitv") -> str:
     """CTE: embeddings L2-normalized once (same two-step as the Spark
     ``unit`` operator, so every normalized element is bit-identical);

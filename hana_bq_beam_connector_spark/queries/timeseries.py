@@ -232,9 +232,7 @@ def ts_ohlc_6h(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Values identical to the oracle's one-window SQL.",
 )
 def ts_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hana_bq_beam_connector_spark.operators._common import (
-        pin_until_release,
-    )
+    from hana_bq_beam_connector_spark.operators._common import persist_reused
     from hana_bq_beam_connector_spark.operators.relational import (
         two_phase_scan,
     )
@@ -243,7 +241,7 @@ def ts_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One full-data pass; everything below reads this bounded frame
     # (≤ distinct (type, value) rows — pinned so all four consumers
     # share the single materialization).
-    vc = pin_until_release(
+    vc = persist_reused(
         v.groupBy("event_type", "value").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )

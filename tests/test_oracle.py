@@ -7,8 +7,13 @@ determinism conventions make both engines bit-identical).
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
+from hana_bq_beam_connector_spark.operators._common import (
+    release_session_pins,
+)
 from hana_bq_beam_connector_spark.oracle import compare_query, duckdb_connection
 from hana_bq_beam_connector_spark.queries import registry
 
@@ -24,11 +29,27 @@ def con(sf_dir):
     c.close()
 
 
+@contextmanager
+def _releases_every_pin(spark):
+    """Run a query from an empty cache; once it is materialized,
+    release_session_pins() alone must empty the cache again — every
+    frame a query pins goes through persist_reused, so a long session
+    that only releases between queries never accumulates caches."""
+    spark.catalog.clearCache()
+    yield
+    release_session_pins()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), "frames left cached after release_session_pins"
+
+
 @pytest.mark.parametrize(
     "spec", _ORACLE_SPECS, ids=[s.name for s in _ORACLE_SPECS]
 )
 def test_oracle_match(spark, con, sf_dir, spec):
-    result = compare_query(spark, con, spec.name, spec.fn, spec.oracle, sf_dir)
+    with _releases_every_pin(spark):
+        result = compare_query(
+            spark, con, spec.name, spec.fn, spec.oracle, sf_dir
+        )
     assert result.ok, str(result)
 
 
@@ -36,8 +57,9 @@ def test_oracle_match(spark, con, sf_dir, spec):
     "spec", _ROWS_ONLY_SPECS, ids=[s.name for s in _ROWS_ONLY_SPECS]
 )
 def test_rows_only_queries_run(spark, sf_dir, spec):
-    df = spec.fn(spark, sf_dir)
-    assert df.count() >= 0
+    with _releases_every_pin(spark):
+        df = spec.fn(spark, sf_dir)
+        assert df.count() >= 0
     assert len(df.schema.fields) > 0
 
 

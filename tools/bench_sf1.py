@@ -80,7 +80,6 @@ def main() -> int:
             "overwrite"
         ).save()
         dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
         release_session_pins()
         return round(dt, 3)
 
@@ -117,7 +116,6 @@ def main() -> int:
             "s": round(time.perf_counter() - t0, 3),
             "pairs": n_pairs,
         }
-        spark.catalog.clearCache()
         release_session_pins()
     auto["ratio"] = (
         round(auto["sf1"]["s"] / auto["sf0.1"]["s"], 2)

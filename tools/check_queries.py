@@ -46,7 +46,6 @@ def main() -> int:
             bad += 1
             for m in res.mismatches[:6]:
                 print(f"  {m}")
-        spark.catalog.clearCache()
         release_session_pins()
     print(f"RESULT: {len(names) - bad}/{len(names)} OK")
     return 1 if bad else 0

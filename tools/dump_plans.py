@@ -40,7 +40,6 @@ def main() -> None:
         with open(path, "w") as fh:
             fh.write(txt)
         print(f"wrote {path} ({len(txt)} chars)")
-        spark.catalog.clearCache()
         release_session_pins()
 
 

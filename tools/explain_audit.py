@@ -134,7 +134,6 @@ def main() -> None:
             f"{f['codegen_stages']} | "
             f"{'yes' if f['pushed_filters'] else '—'} |"
         )
-        spark.catalog.clearCache()
         release_session_pins()
     lines += [
         "",
@@ -173,7 +172,6 @@ def main() -> None:
         )
         # persist_reused caches would otherwise accumulate across the
         # ~270-query static loop and distort later plans/memory.
-        spark.catalog.clearCache()
         release_session_pins()
     lines.append("")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -103,7 +103,6 @@ def main() -> None:
                         f"in={attempt.get('inputBytes', 0):>10} "
                         f"| {attempt.get('name', '')[:70]}"
                     )
-        spark.catalog.clearCache()
         release_session_pins()
 
 

@@ -98,7 +98,6 @@ def main() -> int:
                     file=sys.stderr,
                     flush=True,
                 )
-            spark.catalog.clearCache()
             release_session_pins()
         return res
 

@@ -55,7 +55,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 - loud guards expected
             return f"FAIL:{type(e).__name__}"
         finally:
-            spark.catalog.clearCache()
             release_session_pins()
 
     for name in names:
