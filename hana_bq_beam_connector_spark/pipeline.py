@@ -10,20 +10,33 @@ Spark lifecycle equivalent: driver-side planning stays tiny Python
 lazy DataFrame so Catalyst fuses scan→filter→stringify→write into one
 shuffle-free stage — the pipeline is embarrassingly parallel and the
 physical plan must stay that way at 100 TB (no exchange in explain).
+
+Every chunk stays its own range query, but contiguous chunks are packed
+into one task (a shuffle-free ``coalesce``) when there are more chunks
+than :func:`chunk_tasks` allows: a task and its sink file then cover a
+core's share of the rows, like the reference's BigQueryIO file loads,
+which write one temp file per worker bundle, not per range query.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hana_bq_beam_connector_spark.config import PipelineConfig
+from hana_bq_beam_connector_spark.colutil import resolve_column
+from hana_bq_beam_connector_spark.config import (
+    DEFAULT_CHUNK_SIZE,
+    PipelineConfig,
+)
 from hana_bq_beam_connector_spark.plans.chunking import (
     Interval,
     equi_depth_intervals,
 )
 from hana_bq_beam_connector_spark.sinks import parquet_append
 from hana_bq_beam_connector_spark.sources.jdbc import jdbc_scan
+from hana_bq_beam_connector_spark.tsdomain import window_filter
 from hana_bq_beam_connector_spark.typemap import stringify
 
 
@@ -39,15 +52,21 @@ def select_window(df: DataFrame, config: PipelineConfig) -> DataFrame:
     the RAW column with a typed literal, so Catalyst pushes it into
     the scan (``PushedFilters``) — asserted in tests/test_pipeline.py.
     """
-    from hana_bq_beam_connector_spark.colutil import resolve_column
-    from hana_bq_beam_connector_spark.tsdomain import ts_bound_lit
+    return window_filter(
+        df, config.timestamp_column, config.start_time, config.end_time
+    )
 
-    name, dtype = resolve_column(df, config.timestamp_column)
-    col = F.col(name)
-    cond = col >= ts_bound_lit(dtype, config.start_time)
-    if config.end_time != float("inf"):
-        cond = cond & (col < ts_bound_lit(dtype, config.end_time))
-    return df.where(cond)
+
+def chunk_tasks(spark: SparkSession, n_chunks: int, chunk_size: int) -> int:
+    """Tasks a chunked scan of ``n_chunks`` runs as: one per core, or
+    more when the chunks hold more than ``DEFAULT_CHUNK_SIZE`` rows per
+    task, never more than one per chunk.  Small chunks then share a
+    task and one sink file instead of each paying a task launch and a
+    writer; at the reference's default chunk size nothing is packed."""
+    by_rows = math.ceil(n_chunks * chunk_size / DEFAULT_CHUNK_SIZE)
+    return min(
+        n_chunks, max(spark.sparkContext.defaultParallelism, by_rows)
+    )
 
 
 def run_copy_pipeline(
@@ -58,12 +77,15 @@ def run_copy_pipeline(
     """Plan + build the incremental copy; returns (result_df, intervals).
 
     ``source_df`` supplies a non-JDBC source (the parquet test
-    stand-in); with a JDBC config the intervals become one source
-    partition each via ``predicates=``.  The caller (or
-    :func:`run_and_append`) triggers the sink action.
+    stand-in); with a JDBC config each interval becomes one range
+    query via ``predicates=``, packed into :func:`chunk_tasks` tasks.
+    The caller (or :func:`run_and_append`) triggers the sink action.
     """
     if source_df is None:
         df = jdbc_scan(spark, config)  # schema probe; re-read chunked below
+        # Checked before planning, which is a full pass over the window.
+        _, ts_dtype = resolve_column(df, config.timestamp_column)
+        _assert_jdbc_tz_consistent(spark, ts_dtype)
     else:
         df = source_df
     intervals = equi_depth_intervals(
@@ -74,12 +96,11 @@ def run_copy_pipeline(
         config.end_time,
     )
     if source_df is None:
-        from hana_bq_beam_connector_spark.colutil import resolve_column
-
-        _, ts_dtype = resolve_column(df, config.timestamp_column)
-        _assert_jdbc_tz_consistent(spark, ts_dtype)
-        df = jdbc_scan(spark, config, intervals, ts_dtype=ts_dtype)
-        result = df
+        result = jdbc_scan(spark, config, intervals, ts_dtype=ts_dtype)
+        n_tasks = chunk_tasks(spark, len(intervals), config.chunk_size)
+        if n_tasks < len(intervals):
+            # No shuffle: each task reads its chunks one after another.
+            result = result.coalesce(n_tasks)
     else:
         result = select_window(df, config)
     if config.stringify:
@@ -133,9 +154,9 @@ def run_and_append(
     disagree with the write under concurrent source inserts)."""
     from pyspark.sql import Observation
 
-    result, _ = run_copy_pipeline(spark, config, source_df)
     if config.dest_path is None:
         raise ValueError("dest_path (or a BigQuery dataset) is required")
+    result, _ = run_copy_pipeline(spark, config, source_df)
     obs = Observation()
     observed = result.observe(obs, F.count(F.lit(1)).alias("n"))
     parquet_append(observed, config.dest_path)

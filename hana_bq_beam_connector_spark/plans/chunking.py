@@ -105,17 +105,25 @@ class Interval:
         return pred
 
 
-def _numeric_ts(df: DataFrame, column: str) -> DataFrame:
-    """Project the chunking column to a double in its canonical
-    numeric domain (tsdomain: epoch µs for timestamp/date columns,
-    native value otherwise) so quantile math is uniform across column
-    types.  µs values are < 2^53 until ~2255, so the double is exact
-    and chunk boundaries never drift off a real row value."""
+def _windowed_ts(
+    df: DataFrame, column: str, start: float, end: float
+) -> DataFrame:
+    """The rows of ``[start, end)`` projected to ``__ts``, a double in
+    the column's canonical numeric domain (tsdomain: epoch µs for
+    timestamp/date columns, native value otherwise) so quantile math is
+    uniform across column types.  µs values are < 2^53 until ~2255, so
+    the double is exact and chunk boundaries never drift off a real row
+    value.  The window is cut on the RAW column before projecting, so
+    it reaches the scan's pushed filters: an incremental run reads only
+    its window, not the whole table."""
     from hana_bq_beam_connector_spark.colutil import resolve_column
-    from hana_bq_beam_connector_spark.tsdomain import ts_numeric
+    from hana_bq_beam_connector_spark.tsdomain import (
+        ts_numeric,
+        window_filter,
+    )
 
     column, dtype = resolve_column(df, column)
-    return df.select(
+    return window_filter(df, column, start, end).select(
         ts_numeric(column, dtype).cast("double").alias("__ts")
     )
 
@@ -126,7 +134,6 @@ def equi_depth_intervals(
     chunk_rows: int,
     start: float,
     end: float = float("inf"),
-    relative_error: float = 0.001,
 ) -> list[Interval]:
     """Plan ~chunk_rows-deep half-open intervals over ``[start, end)``.
 
@@ -135,6 +142,8 @@ def equi_depth_intervals(
     the source database (HanaToBQ.java:57).  The interval list is tiny
     (≈ rows/chunk_rows entries) and feeds either
     ``spark.read.jdbc(predicates=...)`` or a parquet-scan filter union.
+    The sketch's relative error is a tenth of one chunk's share of the
+    window (at most 0.001), so chunks stay balanced at any chunk count.
     """
     if chunk_rows <= 0:
         raise ValueError(f"chunk_rows must be positive, got {chunk_rows}")
@@ -153,9 +162,7 @@ def equi_depth_intervals(
         or dtype.startswith("timestamp")
         or dtype == "date"
     )
-    windowed = _numeric_ts(df, column).where(
-        (F.col("__ts") >= start) & (F.col("__ts") < end)
-    )
+    windowed = _windowed_ts(df, column, start, end)
     # Two planning actions (count + quantile sketch) read this frame;
     # without persist each is a full source scan — over JDBC that is
     # the whole table through one connection, twice.
@@ -168,7 +175,8 @@ def equi_depth_intervals(
         if n_chunks == 1:
             return [Interval(start, end)]
         probs = [i / n_chunks for i in range(1, n_chunks)]
-        splits = windowed.approxQuantile("__ts", probs, relative_error)
+        eps = min(0.001, 1 / (10 * n_chunks))
+        splits = windowed.approxQuantile("__ts", probs, eps)
     finally:
         windowed.unpersist()
     bounds: list[float] = [start]
@@ -196,9 +204,7 @@ def equi_depth_intervals_exact(
     global window sort makes it the non-scale path — use
     :func:`equi_depth_intervals` for real inputs.
     """
-    windowed = _numeric_ts(df, column).where(
-        (F.col("__ts") >= start) & (F.col("__ts") < end)
-    )
+    windowed = _windowed_ts(df, column, start, end)
     w = Window.orderBy(F.col("__ts"))
     sampled = (
         windowed.select(

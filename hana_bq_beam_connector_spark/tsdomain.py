@@ -4,7 +4,7 @@ The reference binds its window bounds as *strings* against a numeric
 HANA column and lets the database coerce (HanaToDBRow.java:107-109,
 quirk #3).  Our engine instead defines one explicit numeric domain per
 column type, used consistently by the chunk planner
-(plans/chunking.py), the window filter (pipeline.select_window) and
+(plans/chunking.py), the window filter (:func:`window_filter`) and
 the incremental watermark (plans/incremental.py):
 
 * integral columns (``bigint``/``int``/...): the column's **native**
@@ -37,9 +37,10 @@ silently misclassify a boundary row of a half-open window.
 
 from __future__ import annotations
 
+import math
 from datetime import datetime, timedelta
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 INTEGRAL_TYPES = ("bigint", "int", "smallint", "tinyint")
@@ -106,7 +107,9 @@ def ts_bound_lit(dtype: str, bound: float | int) -> Column:
     hot path.
     """
     if dtype in INTEGRAL_TYPES:
-        return F.lit(int(bound))
+        # x >= b  <=>  x >= ceil(b) and  x < b  <=>  x < ceil(b) for an
+        # integer x, so a fractional bound keeps half-open semantics.
+        return F.lit(math.ceil(bound))
     if not is_time_typed(dtype):
         return F.lit(bound)
     us = _bound_us(bound)
@@ -115,3 +118,25 @@ def ts_bound_lit(dtype: str, bound: float | int) -> Column:
         return F.expr(f"TIMESTAMP_NTZ '{iso}'")
     # timestamp_ltz: an absolute instant — construct tz-independently.
     return F.timestamp_micros(F.lit(us))
+
+
+def window_filter(
+    df: DataFrame, column: str, start: float, end: float
+) -> DataFrame:
+    """``df`` restricted to the half-open window ``[start, end)`` of
+    ``column``, with the bounds in the column's canonical numeric
+    domain.  The compare is on the RAW column against
+    :func:`ts_bound_lit` literals, so both bounds reach the scan's
+    ``PushedFilters`` (parquet row groups, the JDBC WHERE clause).  An
+    infinite bound is omitted; rows with a null timestamp are never in
+    a window."""
+    from hana_bq_beam_connector_spark.colutil import resolve_column
+
+    name, dtype = resolve_column(df, column)
+    col = F.col(name)
+    cond = col.isNotNull()
+    if not math.isinf(start):
+        cond = col >= ts_bound_lit(dtype, start)
+    if not math.isinf(end):
+        cond = cond & (col < ts_bound_lit(dtype, end))
+    return df.where(cond)

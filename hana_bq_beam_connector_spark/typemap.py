@@ -22,7 +22,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
@@ -31,10 +30,12 @@ from pyspark.sql.types import (
     DecimalType,
     DoubleType,
     LongType,
+    NumericType,
     StringType,
     StructField,
     StructType,
     TimestampNTZType,
+    TimestampType,
 )
 
 # HANA type name -> BigQuery type, verbatim from HanaToBQ.java:59-81.
@@ -172,6 +173,17 @@ def catalog_to_schema(
     )
 
 
+# Non-null values of these types print as digits, NaN, Infinity,
+# true/false or ISO dates and timestamps, never as "null".
+_NEVER_PRINTS_NULL = (
+    NumericType,
+    BooleanType,
+    DateType,
+    TimestampType,
+    TimestampNTZType,
+)
+
+
 def stringify(df: DataFrame, *, drop_null_strings: bool = True) -> DataFrame:
     """Reference-parity value conversion (HanaDBRowToTableRowFn.java:21-38).
 
@@ -179,11 +191,20 @@ def stringify(df: DataFrame, *, drop_null_strings: bool = True) -> DataFrame:
     is the literal ``"null"`` become NULL (the reference drops the key
     from the TableRow, which BigQuery stores as NULL).  This is the
     lossy mode — the engine default keeps native types end-to-end.
+
+    The "null" test runs only on columns that can print "null" (strings,
+    binary, nested and other types).  Numeric, boolean, date, timestamp
+    and timestamp_ntz values never print it, so the test is skipped
+    there with the same output.  One ``selectExpr`` over backtick-quoted
+    names builds the projection, so names such as ``a.b`` stay literal.
     """
-    cols = []
-    for name in df.columns:
-        c = F.col(name).cast("string")
-        if drop_null_strings:
-            c = F.when(F.lower(c) == "null", F.lit(None)).otherwise(c)
-        cols.append(c.alias(name))
-    return df.select(*cols)
+    exprs = []
+    for field in df.schema.fields:
+        name = "`" + field.name.replace("`", "``") + "`"
+        text = f"CAST({name} AS STRING)"
+        if drop_null_strings and not isinstance(
+            field.dataType, _NEVER_PRINTS_NULL
+        ):
+            text = f"CASE WHEN lower({text}) = 'null' THEN NULL ELSE {text} END"
+        exprs.append(f"{text} AS {name}")
+    return df.selectExpr(*exprs)

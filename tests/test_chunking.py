@@ -105,3 +105,23 @@ def test_predicates_render(events):
 def test_chunk_rows_validation(events):
     with pytest.raises(ValueError):
         equi_depth_intervals(events, "ts", chunk_rows=0, start=0.0)
+
+
+def test_equi_depth_balance_past_a_thousand_chunks(spark):
+    """The sketch error shrinks with the chunk count: at ~1,000 chunks
+    a fixed 0.001 error is as large as a chunk, which merged chunks
+    (742 intervals, largest 2.9x chunk_rows on this input) instead of
+    planning ceil(n / chunk_rows) balanced ones."""
+    import numpy as np
+
+    n, chunk_rows = 200_000, 200
+    df = spark.range(n).selectExpr(
+        f"CAST(pow(id / {n}.0, 3) * 1e12 AS BIGINT) AS ts"
+    )
+    intervals = equi_depth_intervals(df, "ts", chunk_rows, start=0.0)
+    assert len(intervals) == math.ceil(n / chunk_rows)
+    ts = np.sort(np.array([r["ts"] for r in df.collect()]))
+    edges = np.searchsorted(ts, [iv.lo for iv in intervals] + [np.inf])
+    counts = np.diff(edges)
+    assert counts.sum() == n
+    assert counts.max() <= 1.5 * chunk_rows

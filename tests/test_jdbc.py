@@ -6,6 +6,11 @@ query per planned chunk — not a parquet simulation of it."""
 
 from __future__ import annotations
 
+import glob
+import math
+import os
+import re
+
 import pytest
 
 from hana_bq_beam_connector_spark.config import PipelineConfig
@@ -256,3 +261,145 @@ def test_jdbc_uniform_stride_date_string_bounds(spark, derby_url):
     assert df.rdd.getNumPartitions() == 4
     assert df.count() == 100
     assert sorted(r["EVENT_ID"] for r in df.collect()) == list(range(100))
+
+
+def _part_files(path) -> list[str]:
+    return glob.glob(os.path.join(path, "part-*.parquet"))
+
+
+def _packing_config(url: str, chunk_size: int, dest) -> PipelineConfig:
+    return PipelineConfig(
+        table_name="events_jdbc",
+        timestamp_column="ts",
+        start_time=0,
+        chunk_size=chunk_size,
+        connection_string=url,
+        driver=DERBY_DRIVER,
+        dest_path=str(dest),
+    )
+
+
+def test_small_chunks_pack_into_one_task_per_core(spark, derby_url, tmp_path):
+    """More chunks than cores: contiguous chunks share a task and a
+    sink file (shuffle-free coalesce), each chunk still its own range
+    query, and the sink holds exactly the source rows."""
+    from hana_bq_beam_connector_spark.pipeline import (
+        chunk_tasks,
+        run_copy_pipeline,
+    )
+    from hana_bq_beam_connector_spark.sinks import parquet_append
+
+    cores = spark.sparkContext.defaultParallelism
+    cfg = _packing_config(
+        derby_url, max(1, N_ROWS // (4 * cores)), tmp_path / "sink"
+    )
+    result, intervals = run_copy_pipeline(spark, cfg)
+    assert len(intervals) > cores
+    n_tasks = chunk_tasks(spark, len(intervals), cfg.chunk_size)
+    assert n_tasks == min(
+        len(intervals),
+        max(cores, math.ceil(len(intervals) * cfg.chunk_size / 1_000_000)),
+    )
+    assert result.rdd.getNumPartitions() == n_tasks
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce" in plan and "Exchange" not in plan, plan
+    parquet_append(result, cfg.dest_path)
+    assert len(_part_files(cfg.dest_path)) == n_tasks
+    ids = [r["EVENT_ID"] for r in spark.read.parquet(cfg.dest_path).collect()]
+    assert sorted(ids) == list(range(N_ROWS))
+
+
+def test_few_chunks_write_one_file_per_chunk(spark, derby_url, tmp_path):
+    """No more chunks than cores: nothing is packed — one task and one
+    sink file per chunk, and no coalesce in the plan."""
+    from hana_bq_beam_connector_spark.pipeline import run_copy_pipeline
+    from hana_bq_beam_connector_spark.sinks import parquet_append
+
+    cfg = _packing_config(derby_url, N_ROWS // 2, tmp_path / "sink")
+    result, intervals = run_copy_pipeline(spark, cfg)
+    assert 1 < len(intervals) <= spark.sparkContext.defaultParallelism
+    plan = result._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce" not in plan, plan
+    parquet_append(result, cfg.dest_path)
+    assert len(_part_files(cfg.dest_path)) == len(intervals)
+    assert spark.read.parquet(cfg.dest_path).count() == N_ROWS
+
+
+def test_packed_task_holds_one_source_connection(spark, derby_url):
+    """A packed task runs its range queries one after another and
+    closes each connection before opening the next.  Every source row
+    reports how many transactions (one per open connection) the
+    embedded database holds while its range query runs; with all
+    chunks packed into a single task, every query sees only its own."""
+    from hana_bq_beam_connector_spark.pipeline import run_copy_pipeline
+
+    open_tx = "(SELECT COUNT(*) FROM SYSCS_DIAG.TRANSACTION_TABLE)"
+    cfg = PipelineConfig(
+        table_name=f"(SELECT e.*, {open_tx} AS OPEN_TX FROM events_jdbc e) q",
+        timestamp_column="ts",
+        start_time=0,
+        chunk_size=25,
+        connection_string=derby_url,
+        driver=DERBY_DRIVER,
+    )
+    result, intervals = run_copy_pipeline(spark, cfg)
+    assert len(intervals) > 1
+    seen = result.coalesce(1).groupBy("OPEN_TX").count().collect()
+    assert {r["OPEN_TX"]: r["count"] for r in seen} == {1: N_ROWS}
+
+
+def test_planning_frame_pushes_the_window_into_the_source(spark, derby_url):
+    """The chunk planner cuts the window on the raw column, so the
+    bounds reach the JDBC WHERE clause: an incremental run plans over
+    its window, not over the whole table."""
+    from hana_bq_beam_connector_spark.plans.chunking import _windowed_ts
+
+    probe = jdbc_scan(spark, _config(derby_url))
+    planning = _windowed_ts(probe, "ts", 100, 5_000)
+    plan = planning._jdf.queryExecution().executedPlan().toString()
+    pushed = re.search(r"PushedFilters: \[([^\]]*)\]", plan).group(1)
+    assert "GreaterThanOrEqual(TS,100)" in pushed, pushed
+    assert "LessThan(TS,5000)" in pushed, pushed
+    want = probe.where("ts >= 100 AND ts < 5000").count()
+    assert planning.count() == want > 0
+
+
+def test_failed_checks_run_before_the_planning_scan(
+    spark, derby_url, tmp_path
+):
+    """A config that cannot be copied fails before any Spark job: no
+    planning pass over the source is paid for an error known upfront.
+    Covers the missing sink and the LTZ timezone mismatch."""
+    from hana_bq_beam_connector_spark.pipeline import run_and_append
+
+    jvm = spark._jvm
+    conn = jvm.java.sql.DriverManager.getConnection(derby_url)
+    st = conn.createStatement()
+    st.executeUpdate("CREATE TABLE events_tz (ts TIMESTAMP NOT NULL)")
+    st.close()
+    conn.close()
+    tz_cfg = PipelineConfig(
+        table_name="events_tz",
+        timestamp_column="ts",
+        start_time=0,
+        connection_string=derby_url,
+        driver=DERBY_DRIVER,
+        dest_path=str(tmp_path / "sink"),
+    )
+    jvm_tz = jvm.java.util.TimeZone.getDefault().getID()
+    other_tz = "Asia/Tokyo" if jvm_tz != "Asia/Tokyo" else "America/Denver"
+    session_tz = spark.conf.get("spark.sql.session.timeZone")
+
+    sc = spark.sparkContext
+    group = "fail-before-planning"
+    sc.setJobGroup(group, "copies that must fail before planning")
+    try:
+        with pytest.raises(ValueError, match="dest_path"):
+            run_and_append(spark, _config(derby_url))
+        spark.conf.set("spark.sql.session.timeZone", other_tz)
+        with pytest.raises(RuntimeError, match="timezone"):
+            run_and_append(spark, tz_cfg)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", session_tz)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

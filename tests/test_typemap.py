@@ -1,5 +1,10 @@
 from __future__ import annotations
 
+from collections import Counter
+from datetime import date, datetime
+from decimal import Decimal
+from itertools import zip_longest
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import (
@@ -8,9 +13,13 @@ from pyspark.sql.types import (
     DateType,
     DecimalType,
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
+    StructField,
+    StructType,
     TimestampNTZType,
+    TimestampType,
 )
 
 from hana_bq_beam_connector_spark.typemap import (
@@ -148,6 +157,63 @@ def test_stringify_parity(spark):
     # values stringified; "null"/"NULL" strings dropped to NULL
     # (HanaDBRowToTableRowFn.java:31-35)
     assert out == {("1", "x"), ("2", None), (None, None)}
+
+
+# (column name, type, values): every type stringify treats apart, the
+# strings the "null" rule must and must not drop, and names that only
+# resolve when quoted.
+STRINGIFY_CASES = [
+    ("i", IntegerType(), [1, -7, None]),
+    ("b", LongType(), [2**62, None]),
+    ("dec", DecimalType(12, 2), [Decimal("1.50"), Decimal("-0.01"), None]),
+    ("d", DoubleType(), [1.5, float("nan"), float("inf"), float("-inf"), None]),
+    ("bo", BooleanType(), [True, False, None]),
+    ("dt", DateType(), [date(2024, 1, 5), None]),
+    ("ts", TimestampType(), [datetime(2024, 1, 5, 1, 2, 3, 456789), None]),
+    ("tsn", TimestampNTZType(), [datetime(2024, 1, 5, 1, 2, 3), None]),
+    ("bin", BinaryType(), [b"null", b"NULL", b"x", None]),
+    ("s", StringType(), ["null", "NULL", "Null", " null", "x", None]),
+    ("a.b", StringType(), ["null", "a.b", None]),
+    ("x`y", IntegerType(), [3, None]),
+]
+
+
+def test_stringify_matches_reference_rule_on_every_type(spark):
+    """stringify skips the "null" test on types that never print
+    "null"; its output must equal the reference rule
+    (HanaDBRowToTableRowFn.java:31-35) applied to every column."""
+    schema = StructType(
+        [StructField(name, t) for name, t, _ in STRINGIFY_CASES]
+    )
+    rows = list(zip_longest(*(values for _, _, values in STRINGIFY_CASES)))
+    df = spark.createDataFrame(rows, schema)
+
+    def quoted(name: str) -> str:
+        return "`" + name.replace("`", "``") + "`"
+
+    reference = df.selectExpr(
+        *(
+            f"CASE WHEN lower(CAST({quoted(n)} AS STRING)) = 'null' "
+            f"THEN NULL ELSE CAST({quoted(n)} AS STRING) END AS {quoted(n)}"
+            for n in df.columns
+        )
+    )
+    out = stringify(df)
+    assert out.schema == reference.schema
+    assert out.columns == [name for name, _, _ in STRINGIFY_CASES]
+    got = out.collect()
+    assert Counter(map(tuple, got)) == Counter(
+        map(tuple, reference.collect())
+    )
+    by_col = {n: [r[n] for r in got] for n in out.columns}
+    assert by_col["s"] == [None, None, None, " null", "x", None]
+    assert by_col["bin"] == [None, None, "x", None, None, None]
+    assert by_col["a.b"] == [None, "a.b", None, None, None, None]
+    assert by_col["x`y"] == ["3", None, None, None, None, None]
+    assert by_col["d"][:4] == ["1.5", "NaN", "Infinity", "-Infinity"]
+    # The rule runs only on the three columns that can print "null".
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert plan.count("lower(") == 3, plan
 
 
 def test_schema_drift_report():
