@@ -2,8 +2,8 @@
 
 Mirrors HanaToBQ's 10 Beam options (HanaToBQ.java:175-224) with the
 documented fixes: ``--end-time`` is honored (the reference declares
-but ignores it), timestamps are typed, and the lossy stringify /
-decimal-as-double behaviors are opt-in flags.  A ``--source-parquet``
+but ignores it), timestamps are typed, and the lossy stringify
+behavior is an opt-in flag.  A ``--source-parquet``
 path substitutes the JDBC source for local/lakehouse runs, and
 ``--state`` switches to checkpointed incremental mode (high-watermark
 CDC done right).

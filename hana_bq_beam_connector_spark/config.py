@@ -11,8 +11,7 @@ deliberate fixes documented in SURVEY.md §2a quirks:
 * timestamps are typed values, not strings bound with ``setString``
   (HanaToDBRow.java:107-109).
 * ``stringify`` (ref-parity lossy mode, HanaDBRowToTableRowFn.java:26-35)
-  and ``decimal_as_double`` (HanaToBQ.java:77-80 DECIMAL→FLOAT) are
-  opt-in toggles, off by default.
+  is an opt-in toggle, off by default.
 """
 
 from __future__ import annotations
@@ -45,9 +44,8 @@ class PipelineConfig:
     dest_dataset: str | None = None
     dest_path: str | None = None  # local parquet "BigQuery" stand-in
 
-    # Reference-parity toggles (both lossy; default off = fixed).
+    # Reference-parity toggle (lossy; default off = fixed).
     stringify: bool = False
-    decimal_as_double: bool = False
 
     jdbc_options: dict[str, str] = field(default_factory=dict)
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,6 +24,7 @@ from pyspark.sql import functions as F
 from hana_bq_beam_connector_spark.config import PipelineConfig
 from hana_bq_beam_connector_spark.pipeline import run_copy_pipeline
 from hana_bq_beam_connector_spark.sinks import parquet_append
+from hana_bq_beam_connector_spark.typemap import stringify
 
 
 def read_watermark(state_path: str, default: float) -> float:
@@ -51,21 +53,10 @@ def incremental_copy(
     """One incremental run: copy [watermark, end_time), advance the
     watermark to max(ts)+1 of the copied rows.  Returns rows copied."""
     watermark = read_watermark(state_path, config.start_time)
-    run_config = PipelineConfig(
-        table_name=config.table_name,
-        timestamp_column=config.timestamp_column,
-        start_time=watermark,
-        end_time=config.end_time,
-        chunk_size=config.chunk_size,
-        connection_string=config.connection_string,
-        username=config.username,
-        password=config.password,
-        driver=config.driver,
-        dest_dataset=config.dest_dataset,
-        dest_path=config.dest_path,
-        stringify=config.stringify,
-        jdbc_options=config.jdbc_options,
-    )
+    # Count and max run on the typed frame; only the append is
+    # stringified.  A stringified max compares lexicographically
+    # ("999" > "1000") and cannot be advanced by one.
+    run_config = replace(config, start_time=watermark, stringify=False)
     result, _ = run_copy_pipeline(spark, run_config, source_df)
     # Watermark math stays in the column's canonical integer domain
     # (tsdomain: native for integral columns, epoch µs for timestamp
@@ -84,7 +75,9 @@ def incremental_copy(
         return 0
     if config.dest_path is None:
         raise ValueError("dest_path is required")
-    parquet_append(result, config.dest_path)
+    parquet_append(
+        stringify(result) if config.stringify else result, config.dest_path
+    )
     # next window starts just past the max ingested event time
     write_watermark(state_path, mx + 1)
     return n

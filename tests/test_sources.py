@@ -4,13 +4,18 @@ actually prunes and pushes down (the 100 TB contract)."""
 
 from __future__ import annotations
 
+import shutil
+import uuid
+
 from pyspark.sql import functions as F
 
 from hana_bq_beam_connector_spark.sources.files import (
+    _local_listing,
     load_table,
     read_csv,
     read_json,
     read_orc,
+    read_parquet,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -417,3 +422,115 @@ def test_schema_evolution_merge_schema(spark, tmp_path):
     assert rows == {(1, "a", None), (2, "b", None), (3, "c", 30.0)}
     # and the new column is filterable with pushdown intact
     assert merged.where(F.col("score") > 10).count() == 1
+
+
+def _with_job_ids(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the ids
+    of the Spark jobs it submitted."""
+    sc = spark.sparkContext
+    group = f"schema-cache-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "schema cache probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_of_unchanged_table_submits_no_job(spark, tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copyfile(f"{SF}/orders.parquet", sf / "orders.parquet")
+    _, first_jobs = _with_job_ids(
+        spark, lambda: load_table(spark, str(sf), "orders")
+    )
+    second, second_jobs = _with_job_ids(
+        spark, lambda: load_table(spark, str(sf), "orders")
+    )
+    assert first_jobs, "the first load infers the schema in a Spark job"
+    assert second_jobs == []
+    plain = spark.read.parquet(str(sf / "orders.parquet"))
+    assert second.schema == plain.schema
+    assert _rows(second) == _rows(plain)
+
+
+def test_rewrite_with_new_schema_is_reinferred(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert read_parquet(spark, path).columns == ["id"]
+    assert read_parquet(spark, path).columns == ["id"]
+    spark.range(3).selectExpr("id", "string(id) AS s").write.mode(
+        "overwrite"
+    ).parquet(path)
+    back = read_parquet(spark, path)
+    assert back.columns == ["id", "s"]
+    assert _rows(back) == [(0, "0"), (1, "1"), (2, "2")]
+
+
+def test_partitioned_read_matches_uncached_and_sees_new_partition(
+    spark, tmp_path
+):
+    path = str(tmp_path / "parts")
+    schema = "v long, s string, k int"
+    rows = [(1, "a", 10), (2, "b", 20)]
+    spark.createDataFrame(rows, schema).write.partitionBy("k").parquet(path)
+    read_parquet(spark, path)
+    cached = read_parquet(spark, path)
+    plain = spark.read.parquet(path)
+    assert cached.schema == plain.schema
+    assert cached.dtypes == [("v", "bigint"), ("s", "string"), ("k", "int")]
+    assert _rows(cached) == _rows(plain)
+
+    spark.createDataFrame([(3, "c", 30)], schema).write.mode(
+        "append"
+    ).partitionBy("k").parquet(path)
+    assert _rows(read_parquet(spark, path)) == [
+        (1, "a", 10), (2, "b", 20), (3, "c", 30)
+    ]
+
+
+def test_parquet_setting_change_reinfers(spark, tmp_path):
+    """``binaryAsString`` applies to footers without a Spark schema, so
+    the file is written by pyarrow."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "b.parquet")
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), path)
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, path).dtypes == [("b", "binary")]
+        spark.conf.set(key, "true")
+        assert read_parquet(spark, path).dtypes == [("b", "string")]
+        spark.conf.set(key, "false")
+        assert read_parquet(spark, path).dtypes == [("b", "binary")]
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_non_local_paths_are_not_cached(tmp_path):
+    assert _local_listing("gs://bucket/t.parquet") is None
+    assert _local_listing(str(tmp_path / "missing")) is None
+    assert _local_listing(f"{SF}/*.parquet") is None
+    assert _local_listing(f"file://{SF}/orders.parquet") == _local_listing(
+        f"{SF}/orders.parquet"
+    )
+
+
+def test_self_join_of_two_loads_resolves(spark):
+    a = load_table(spark, SF, "nation")
+    b = load_table(spark, SF, "nation")
+    got = {
+        (r[0], r[1])
+        for r in a.join(b, a["n_regionkey"] == b["n_nationkey"])
+        .select(a["n_name"], b["n_name"])
+        .collect()
+    }
+    names = {r["n_nationkey"]: r["n_name"] for r in a.collect()}
+    want = {
+        (r["n_name"], names[r["n_regionkey"]])
+        for r in a.select("n_name", "n_regionkey").collect()
+    }
+    assert got == want and len(got) == 25

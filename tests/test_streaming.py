@@ -115,6 +115,41 @@ def test_incremental_copy_advances_watermark(spark, events, tmp_path):
     assert read_watermark(state, 0) > wm
 
 
+@pytest.mark.parametrize(
+    "ts_expr", ["id * 10", "timestamp_seconds(id + 1000000)"]
+)
+def test_incremental_copy_stringify_copies_each_row_once(
+    spark, tmp_path, ts_expr
+):
+    """A stringified incremental copy takes its watermark from the typed
+    frame: both runs succeed, rows inserted between them are copied,
+    and no row lands in the sink twice."""
+    dest = str(tmp_path / "sink")
+    state = str(tmp_path / "state.json")
+    cfg = PipelineConfig(
+        table_name="t",
+        timestamp_column="ts",
+        start_time=0,
+        chunk_size=400,
+        dest_path=dest,
+        stringify=True,
+    )
+
+    def source(n):
+        return spark.range(n).withColumn("ts", F.expr(ts_expr))
+
+    assert incremental_copy(spark, cfg, state, source_df=source(1000)) == 1000
+    wm = read_watermark(state, 0)
+    assert wm > 0
+    assert incremental_copy(spark, cfg, state, source_df=source(1500)) == 500
+    assert read_watermark(state, 0) > wm
+
+    sink = spark.read.parquet(dest)
+    assert dict(sink.dtypes) == {"id": "string", "ts": "string"}
+    ids = sorted(int(r["id"]) for r in sink.select("id").collect())
+    assert ids == list(range(1500))
+
+
 def test_stateful_distinct_keys_equals_batch_distinct(
     spark, events, stream_dir, tmp_path
 ):
