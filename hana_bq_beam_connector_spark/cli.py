@@ -26,7 +26,7 @@ from hana_bq_beam_connector_spark.config import (
     DEFAULT_JDBC_DRIVER,
     PipelineConfig,
 )
-from hana_bq_beam_connector_spark.pipeline import run_and_append
+from hana_bq_beam_connector_spark.pipeline import NO_SINK, run_and_append
 from hana_bq_beam_connector_spark.plans.incremental import incremental_copy
 from hana_bq_beam_connector_spark.session import get_spark
 from hana_bq_beam_connector_spark.sources.files import read_parquet
@@ -168,6 +168,10 @@ def main(argv: list[str] | None = None) -> int:
         dest_path=args.dest_path,
         stringify=args.stringify,
     )
+    # Every mode but the two read-only diffs copies into --dest-path;
+    # refuse before a session starts or a source is read.
+    if not (args.reconcile or args.plan_backfill or args.dest_path):
+        raise SystemExit(NO_SINK)
     spark = get_spark(master=args.master)
     source = (
         read_parquet(spark, args.source_parquet)
@@ -272,8 +276,6 @@ def main(argv: list[str] | None = None) -> int:
             zorder_clustered_write,
         )
 
-        if config.dest_path is None:
-            raise SystemExit("--cluster-by needs --dest-path")
         result, _ = run_copy_pipeline(spark, config, source_df=source)
         cols = [c.strip() for c in args.cluster_by.split(",") if c.strip()]
         n = result.count()

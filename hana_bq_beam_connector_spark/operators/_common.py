@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame
 # CALLER materializes the returned frame.  Neither `del` nor the
 # ContextCleaner frees a persisted frame — only an explicit unpersist
 # (or clearCache) does — so without the registry a long session (the
-# driver contract runs 272 queries in one) would accumulate
+# driver contract runs 271 queries in one) would accumulate
 # corpus-sized cached frames.  list.append is atomic under the GIL,
 # so pool threads may pin concurrently (rec_user_candidates).
 _SESSION_PINS: list[DataFrame] = []

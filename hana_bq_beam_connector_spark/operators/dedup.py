@@ -518,25 +518,25 @@ def hamming(col_a: str, col_b: str) -> Column:
     return F.expr(f"bit_count({col_a} ^ {col_b})").cast("long")
 
 
+# Round budget of near_dup_clusters (measured, simulation in tests):
+# pointer jumping makes label-REFERENCE chains logarithmic, but rounds
+# are still bounded by min-DISCOVERY propagation, which on sparse
+# subcritical random graphs (many mid-size tree-ish components)
+# empirically needs ~22-26 rounds regardless of whether extra jump
+# hops are added — a 200-node random graph needs 22, a 10^5-node one
+# 15.  50 covers every measured shape with 2× headroom; a graph that
+# needs more fails with a named RuntimeError, never half-merged labels.
+CC_MAX_ROUNDS = 50
+
+
 def near_dup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 50,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over a near-dup pair list: (node,
     cluster_id) where cluster_id = MIN node id in the component.
-
-    ``max_iter`` note (measured, simulation in tests): pointer
-    jumping makes label-REFERENCE chains logarithmic, but rounds are
-    still bounded by min-DISCOVERY propagation, which on sparse
-    subcritical random graphs (many mid-size tree-ish components)
-    empirically needs ~22-26 rounds regardless of whether extra jump
-    hops are added — a 200-node random graph needs 22, a 10^5-node
-    one 15.  50 covers every measured shape with 2× headroom; truly
-    adversarial graphs should use :func:`cc_star` (provably O(log n)
-    rounds), equivalence-tested against this operator.
 
     Pair generation (MinHash/SimHash/embedding LSH) yields *edges*; a
     dedup pipeline needs the transitive closure — A~B and B~C must
@@ -551,8 +551,8 @@ def near_dup_clusters(
     each node also takes its label's own label (one self-join of the
     tiny (node, label) frame) — so rounds are O(log diameter), not
     O(diameter): a 10^6-node chain converges in ~20 rounds instead
-    of 10^6.  The loop runs to a detected fixpoint and RAISES if
-    max_iter is exhausted — silently returning half-merged clusters
+    of 10^6.  The loop runs to a detected fixpoint and RAISES after
+    ``CC_MAX_ROUNDS`` rounds — silently returning half-merged clusters
     would under-delete duplicates.
 
     Rounds persist (fast: AQE-coalesced millisecond jobs) with a
@@ -596,7 +596,7 @@ def near_dup_clusters(
     labels = pinned
     converged = False
     prev_persisted = None
-    for it in range(max_iter):
+    for it in range(CC_MAX_ROUNDS):
         # min over {self} ∪ {neighbor labels} ∪ {label's label}; self
         # rows are tagged so the same agg also yields the previous
         # label — convergence detection costs one more agg column,
@@ -669,24 +669,28 @@ def near_dup_clusters(
         if changed == 0:
             converged = True
             break
-    if not converged:
-        edges.unpersist()
-        pinned.unpersist()
-        raise RuntimeError(
-            f"near_dup_clusters did not converge in {max_iter} rounds — "
-            "component diameter exceeds 2^max_iter or the edge list is "
-            "being regenerated nondeterministically between rounds"
-        )
-    # Hand the caller a checkpointed leaf, not the iterative lineage:
-    # the accumulated plan is exponentially large as a tree (fine to
-    # EXECUTE through the per-round caches, pathological to reprint /
-    # reoptimize downstream, and silently recomputed from scratch if
-    # the caches are evicted).  Cheap: reads the final cached round.
-    out = _plan_reset(labels, checkpoint_dir)
+    if converged:
+        # Hand the caller a checkpointed leaf, not the iterative
+        # lineage: the accumulated plan is exponentially large as a
+        # tree (fine to EXECUTE through the per-round caches,
+        # pathological to reprint / reoptimize downstream, and
+        # silently recomputed from scratch if the caches are evicted).
+        # Cheap: reads the final cached round.
+        out = _plan_reset(labels, checkpoint_dir)
+    # One release path for both outcomes: the last round's plain
+    # persist is not a session pin, so release_session_pins() would
+    # never free it.
     edges.unpersist()
     pinned.unpersist()
     if prev_persisted is not None:
         prev_persisted.unpersist()
+    if not converged:
+        raise RuntimeError(
+            f"near_dup_clusters did not converge in {CC_MAX_ROUNDS} "
+            "rounds — the graph needs more min-label rounds than the "
+            "budget, or the edge list is being regenerated "
+            "nondeterministically between rounds"
+        )
     return out
 
 
@@ -838,133 +842,3 @@ def embedding_near_dup_pairs(
         .where(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-
-
-def cc_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the documented swap-in for :func:`near_dup_clusters`
-    on ADVERSARIAL graphs; returns the identical (node, label=min
-    component id) frame (equivalence-tested on chains, cliques,
-    bridges and the real LSH pair graph).
-
-    Why a second algorithm: label propagation's per-round cost rides
-    the FULL edge list forever, and its pointer-jump join assumes the
-    label frame stays small.  Star contraction instead REWRITES the
-    edge set each round — large-star hangs every node's larger
-    neighbors onto its minimum, small-star re-hangs smaller neighbors
-    — provably converging in O(log n) rounds with the edge count
-    non-increasing, so hostile long-chain / high-degree graphs can't
-    inflate intermediate state.  Each half-round is one groupBy(min)
-    + one equi-join + distinct: plain partial-aggregable shuffles,
-    nothing quadratic.
-
-    Convergence: a one-row (count, xor-of-pair-hashes) checksum per
-    round — equal checksums are confirmed with an exact anti-join
-    before declaring the fixpoint (the checksum only gates when the
-    expensive exact check runs).  Raises if ``max_iter`` is
-    exhausted, same contract as ``near_dup_clusters``.
-    """
-    # Node universe from the RAW pairs (before dropping self-loops):
-    # a node whose only edge is a self-loop is still "a node with an
-    # edge" and must label itself, matching near_dup_clusters.
-    all_nodes = _persist(
-        pairs.select(F.col(id_a).alias("node"))
-        .unionByName(pairs.select(F.col(id_b).alias("node")))
-        .distinct()
-    )
-    canon = _persist(
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    def _checksum(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(a, b))"), F.lit(0)
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    edges = canon
-    prev_sum = _checksum(edges)
-    converged = False
-    for _ in range(max_iter):
-        sym = edges.unionByName(
-            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        # large-star: for each node u, m = min(N(u) ∪ {u}); attach
-        # every LARGER neighbor v directly to m.
-        mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
-        ls = (
-            sym.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(
-                F.least(F.col("mn"), F.col("a")).alias("a"),
-                F.col("b").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-        # small-star on the (a < b) canonical output: node u = b's
-        # smaller neighbors are the a's; m = min of them; re-hang
-        # every smaller neighbor (and u itself) onto m.
-        mins2 = ls.groupBy("b").agg(F.min("a").alias("mn"))
-        ss = (
-            ls.join(mins2, "b")
-            .select(F.col("mn").alias("a"), F.col("a").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .unionByName(
-                mins2.select(F.col("mn").alias("a"), F.col("b").alias("b"))
-            )
-            .distinct()
-        )
-        # Eager localCheckpoint, not persist: the round's plan feeds
-        # edges into sym twice, two joins and two distincts — lineage
-        # grows ~6× per round, and a persisted-but-unresolved plan
-        # OOMs the driver during analysis by round ~7.  The round is
-        # materialized for the checksum anyway, so checkpointing here
-        # is the same job with a truncated plan.  (Cluster-scale:
-        # reliable checkpoint dir, same as near_dup_clusters.)
-        new_edges = _plan_reset(ss, checkpoint_dir)
-        new_sum = _checksum(new_edges)
-        if new_sum == prev_sum:
-            # cheap checksum matched — confirm exactly before stopping
-            diff = (
-                new_edges.join(edges, ["a", "b"], "left_anti").limit(1).count()
-                + edges.join(new_edges, ["a", "b"], "left_anti")
-                .limit(1)
-                .count()
-            )
-            if diff == 0:
-                converged = True
-        edges, prev_sum = new_edges, new_sum
-        if converged:
-            break
-    if not converged:
-        raise RuntimeError(
-            f"cc_star did not converge within {max_iter} rounds"
-        )
-    # Fixpoint edges form stars (min, v): every non-min node holds its
-    # component min as its (unique) smaller endpoint; minima label
-    # themselves.
-    nonmin = edges.groupBy(F.col("b").alias("node")).agg(
-        F.min("a").alias("label")
-    )
-    out = all_nodes.join(nonmin, "node", "left").select(
-        "node", F.coalesce("label", "node").alias("label")
-    )
-    canon.unpersist()
-    all_nodes.unpersist()
-    return out

@@ -39,6 +39,12 @@ from hana_bq_beam_connector_spark.sources.jdbc import jdbc_scan
 from hana_bq_beam_connector_spark.tsdomain import window_filter
 from hana_bq_beam_connector_spark.typemap import stringify
 
+# Every copy mode writes a parquet sink; nothing reads dest_dataset.
+NO_SINK = (
+    "dest_path is required: --dest-path (a parquet directory) is the "
+    "only sink this build writes; --dest-dataset is not written to"
+)
+
 
 def select_window(df: DataFrame, config: PipelineConfig) -> DataFrame:
     """Half-open ``[start_time, end_time)`` restriction on the
@@ -155,7 +161,7 @@ def run_and_append(
     from pyspark.sql import Observation
 
     if config.dest_path is None:
-        raise ValueError("dest_path (or a BigQuery dataset) is required")
+        raise ValueError(NO_SINK)
     result, _ = run_copy_pipeline(spark, config, source_df)
     obs = Observation()
     observed = result.observe(obs, F.count(F.lit(1)).alias("n"))

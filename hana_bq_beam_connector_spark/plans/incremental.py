@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hana_bq_beam_connector_spark.config import PipelineConfig
-from hana_bq_beam_connector_spark.pipeline import run_copy_pipeline
+from hana_bq_beam_connector_spark.pipeline import NO_SINK, run_copy_pipeline
 from hana_bq_beam_connector_spark.sinks import parquet_append
 from hana_bq_beam_connector_spark.typemap import stringify
 
@@ -52,6 +52,8 @@ def incremental_copy(
 ) -> int:
     """One incremental run: copy [watermark, end_time), advance the
     watermark to max(ts)+1 of the copied rows.  Returns rows copied."""
+    if config.dest_path is None:
+        raise ValueError(NO_SINK)
     watermark = read_watermark(state_path, config.start_time)
     # Count and max run on the typed frame; only the append is
     # stringified.  A stringified max compares lexicographically
@@ -73,8 +75,6 @@ def incremental_copy(
     n, mx = agg["n"], agg["mx"]
     if n == 0:
         return 0
-    if config.dest_path is None:
-        raise ValueError("dest_path is required")
     parquet_append(
         stringify(result) if config.stringify else result, config.dest_path
     )

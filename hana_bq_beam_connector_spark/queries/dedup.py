@@ -183,10 +183,13 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pairs) with a deterministic canonical survivor per cluster "
     "(min doc_id).  Pair lists alone under-delete: A~B, B~C must "
     "collapse to one survivor even when A~C never became a candidate "
-    "pair.  Spark side is iterative min-label propagation (per round: "
-    "one join + one agg shuffle, O(1)-deep lineage via "
-    "persist/unpersist), converging in O(component diameter); the "
-    "oracle replays it as a DuckDB recursive CTE reachability walk.",
+    "pair.  Spark side is iterative min-label propagation with "
+    "pointer jumping (per round: one join + one agg shuffle, plus a "
+    "label self-join from round 3), so a chain converges in "
+    "O(log diameter) rounds; each round is persisted and the previous "
+    "one released, and a localCheckpoint every fifth round truncates "
+    "the plan.  The oracle replays it as a DuckDB recursive CTE "
+    "reachability walk.",
 )
 def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -864,49 +867,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("containment", cont)
         .where(F.col("containment") >= 0.04)
         .select("id_a", "id_b", "containment")
-    )
-
-
-@register(
-    "dedup_cluster_star",
-    f"""
-    WITH RECURSIVE {_duck_minhash_ctes()},
-    e2 AS (
-      SELECT id_a AS src, id_b AS dst FROM verified
-      UNION
-      SELECT id_b AS src, id_a AS dst FROM verified
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM e2),
-    walk(node, label) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e2.dst, walk.label FROM walk JOIN e2 ON e2.src = walk.node
-    )
-    SELECT node AS doc_id, MIN(label) AS cluster_id,
-           node = MIN(label) AS is_canonical
-    FROM walk GROUP BY node
-    """,
-    doc="Same clusters as dedup_cluster_canonical, computed by the "
-    "OTHER distributed CC algorithm: alternating large-star / "
-    "small-star contraction (operators/dedup.cc_star) — provably "
-    "O(log n) rounds with a non-increasing edge set, the swap-in for "
-    "graphs where label propagation's min-discovery rounds (~22-26 "
-    "measured on subcritical random graphs) are too many.  Both "
-    "implementations against one recursive-CTE oracle pins their "
-    "equivalence inside the correctness gate itself.",
-)
-def dedup_cluster_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hana_bq_beam_connector_spark.operators.dedup import cc_star
-
-    d = load_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dup_pairs(
-        d, id_col="doc_id", text_col="text", k=3, threshold=0.8
-    )
-    labels = cc_star(pairs, id_a="id_a", id_b="id_b")
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
     )
 
 

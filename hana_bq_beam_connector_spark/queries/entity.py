@@ -17,9 +17,9 @@ Scale design (identical discipline to operators/dedup.py):
 * the self-join carries only (key, id, name) — verification needs the
   name anyway, everything else stays behind until after the verify
   filter;
-* clustering reuses the iterative min-label-propagation operator
-  (`operators/dedup.py:364` near_dup_clusters): per round one join +
-  one agg over (id, id) pairs, O(log diameter) rounds.
+* clustering is `operators/entity.py` blocked_fuzzy_components: one
+  ``applyInPandas`` pass per (brand, noun) block fuses the fuzzy
+  verify with an in-block union-find, so no iterative rounds run.
 """
 
 from __future__ import annotations

@@ -91,6 +91,39 @@ def test_cli_required_options():
         build_parser().parse_args(["--table-name", "t"])
 
 
+def test_cli_dest_dataset_alone_fails_before_any_job(spark, tmp_path):
+    """--dest-dataset is never written to: without --dest-path the CLI
+    refuses with the message naming --dest-path as the only sink, and
+    submits no Spark job — not even the schema read of a source this
+    session has never seen."""
+    import shutil
+
+    from hana_bq_beam_connector_spark.pipeline import NO_SINK
+
+    src = str(tmp_path / "events.parquet")
+    shutil.copyfile(f"{SF}/events.parquet", src)
+    sc = spark.sparkContext
+    sc.setJobGroup("cli_no_sink_probe", "dest-dataset without dest-path")
+    try:
+        with pytest.raises(SystemExit) as exc:
+            main(
+                [
+                    "--table-name", "events",
+                    "--timestamp-column", "ts",
+                    "--start-time", "0",
+                    "--source-parquet", src,
+                    "--dest-dataset", "analytics",
+                    "--master", "local[4]",
+                ]
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert str(exc.value) == NO_SINK
+    assert "--dest-path" in NO_SINK
+    jobs = sc.statusTracker().getJobIdsForGroup("cli_no_sink_probe")
+    assert list(jobs) == []
+
+
 def test_runner_list_and_run(capsys):
     from hana_bq_beam_connector_spark.runner import main as runner_main
 

@@ -755,77 +755,6 @@ def test_pq_topk_rebuild_is_memoized_and_identical(spark):
     assert sorted(map(tuple, rebuilt_df.collect())) == first
 
 
-@pytest.mark.parametrize(
-    "name,edges",
-    [
-        ("chain", [(i, i + 1) for i in range(100)]),
-        ("reverse_chain", [(i + 1, i) for i in range(50)]),
-        ("star", [(0, i) for i in range(1, 20)]),
-        (
-            "cliques_bridge",
-            [(i, j) for i in range(5) for j in range(i + 1, 5)]
-            + [(10 + i, 10 + j) for i in range(5) for j in range(i + 1, 5)]
-            + [(4, 10)],
-        ),
-    ],
-)
-def test_cc_star_equals_label_propagation(spark, name, edges):
-    """Large-star/small-star contraction must produce the identical
-    (node, min-id label) frame as min-label propagation on every graph
-    shape — including the chain shapes that are label propagation's
-    worst case and star contraction's reason to exist."""
-    from hana_bq_beam_connector_spark.operators.dedup import (
-        cc_star,
-        near_dup_clusters,
-    )
-
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    a = sorted(map(tuple, cc_star(df).collect()))
-    b = sorted(map(tuple, near_dup_clusters(df).collect()))
-    assert a == b and len(a) > 0, name
-
-
-def test_cc_random_graph_converges_both(spark):
-    """Regression: a 200-node subcritical random graph (one 111-node
-    component) needs 22 label-propagation rounds — beyond the old
-    max_iter=20, which made near_dup_clusters RAISE on a graph a few
-    hundred LSH pairs can produce.  Both algorithms must converge and
-    agree; the python simulation of the same update rule pins the
-    round count the default must cover."""
-    import collections
-    import random as rnd
-
-    from hana_bq_beam_connector_spark.operators.dedup import (
-        cc_star,
-        near_dup_clusters,
-    )
-
-    rnd.seed(7)
-    edges = [(rnd.randrange(200), rnd.randrange(200)) for _ in range(150)]
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    a = sorted(map(tuple, cc_star(df).collect()))
-    b = sorted(map(tuple, near_dup_clusters(df).collect()))
-    assert a == b
-
-    # ground truth via union-find
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, v in edges:
-        parent[find(u)] = find(v)
-    truth = collections.defaultdict(set)
-    for n in parent:
-        truth[find(n)].add(n)
-    want = sorted((n, min(truth[find(n)])) for n in parent)
-    assert a == want
-
-
 def test_ppm_parser_rejects_malformed_and_roundtrips():
     from hana_bq_beam_connector_spark.operators.multimodal import (
         _parse_ppm,

@@ -4,7 +4,9 @@ random timestamp distributions, and sketch-accuracy checks."""
 from __future__ import annotations
 
 import math
+import random
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -136,6 +138,71 @@ def test_near_dup_clusters_match_union_find(spark, edges):
     assert got == _union_find_components(edges)
 
 
+def _random_edges(seed: int, n_nodes: int, n_edges: int):
+    rnd = random.Random(seed)
+    return [
+        (rnd.randrange(n_nodes), rnd.randrange(n_nodes))
+        for _ in range(n_edges)
+    ]
+
+
+@pytest.mark.parametrize(
+    "name,edges",
+    [
+        ("chain", [(i, i + 1) for i in range(100)]),
+        ("reverse_chain", [(i + 1, i) for i in range(50)]),
+        ("star", [(0, i) for i in range(1, 20)]),
+        (
+            "cliques_bridge",
+            [(i, j) for i in range(5) for j in range(i + 1, 5)]
+            + [(10 + i, 10 + j) for i in range(5) for j in range(i + 1, 5)]
+            + [(4, 10)],
+        ),
+        # subcritical random graph (one 111-node component) that needs
+        # 22 rounds: past the old 20-round budget, which raised on it
+        ("random_200", _random_edges(7, 200, 150)),
+    ],
+)
+def test_near_dup_clusters_shapes_match_union_find(spark, name, edges):
+    """Fixed graph shapes label propagation finds hardest — long
+    chains in both id orders, a hub, two cliques joined by one bridge,
+    a deep random graph — equal a driver-side union-find."""
+    from hana_bq_beam_connector_spark.operators.dedup import (
+        near_dup_clusters,
+    )
+
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = {
+        r["node"]: r["label"] for r in near_dup_clusters(pairs).collect()
+    }
+    assert got == _union_find_components(edges), name
+
+
+def test_near_dup_clusters_over_budget_raises_and_frees_cache(
+    spark, monkeypatch
+):
+    """A graph that needs more rounds than the budget fails with the
+    named error, and release_session_pins() then leaves nothing
+    cached: the last round's plain persist is freed on the raise path
+    too, not only on success."""
+    from hana_bq_beam_connector_spark.operators import dedup
+    from hana_bq_beam_connector_spark.operators._common import (
+        release_session_pins,
+    )
+
+    release_session_pins()
+    spark.catalog.clearCache()
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 3)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        dedup.near_dup_clusters(pairs)
+    release_session_pins()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), "frames left cached after a failed run"
+
+
 _key_lists = st.lists(
     st.integers(min_value=-1000, max_value=1000), min_size=1, max_size=300
 )
@@ -174,7 +241,7 @@ def test_cms_never_undercounts(spark, keys):
 def test_near_dup_clusters_deep_chain(spark):
     """A 60-node path needs 60 rounds under plain min-label
     propagation (the pre-fix code silently returned half-merged
-    labels past max_iter=20, and its uncheckpointed per-round plan
+    labels past 20 rounds, and its uncheckpointed per-round plan
     doubled until the driver OOMed stringifying it); pointer jumping
     + localCheckpoint converge it in ~log2(60) rounds with a flat
     plan."""

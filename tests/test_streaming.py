@@ -115,6 +115,19 @@ def test_incremental_copy_advances_watermark(spark, events, tmp_path):
     assert read_watermark(state, 0) > wm
 
 
+def test_incremental_copy_without_sink_fails_even_on_empty_window(
+    spark, tmp_path
+):
+    """No sink is an error before any planning, also when the window
+    holds no rows: an empty run must not pass for a copy."""
+    state = str(tmp_path / "state.json")
+    cfg = PipelineConfig(table_name="t", timestamp_column="ts", start_time=0)
+    empty = spark.range(0).withColumn("ts", F.col("id"))
+    with pytest.raises(ValueError, match="--dest-path"):
+        incremental_copy(spark, cfg, state, source_df=empty)
+    assert not os.path.exists(state)
+
+
 @pytest.mark.parametrize(
     "ts_expr", ["id * 10", "timestamp_seconds(id + 1000000)"]
 )
