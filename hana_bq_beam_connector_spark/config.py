@@ -12,6 +12,8 @@ deliberate fixes documented in SURVEY.md §2a quirks:
   (HanaToDBRow.java:107-109).
 * ``stringify`` (ref-parity lossy mode, HanaDBRowToTableRowFn.java:26-35)
   is an opt-in toggle, off by default.
+* ``destDataset`` has no field: the sink is a parquet directory,
+  ``dest_path``, the only sink this build writes.
 """
 
 from __future__ import annotations
@@ -40,9 +42,8 @@ class PipelineConfig:
     password: str | None = None
     driver: str = DEFAULT_JDBC_DRIVER
 
-    # Sink.
-    dest_dataset: str | None = None
-    dest_path: str | None = None  # local parquet "BigQuery" stand-in
+    # Sink: a local parquet "BigQuery" stand-in.
+    dest_path: str | None = None
 
     # Reference-parity toggle (lossy; default off = fixed).
     stringify: bool = False

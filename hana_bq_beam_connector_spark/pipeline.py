@@ -16,11 +16,17 @@ into one task (a shuffle-free ``coalesce``) when there are more chunks
 than :func:`chunk_tasks` allows: a task and its sink file then cover a
 core's share of the rows, like the reference's BigQueryIO file loads,
 which write one temp file per worker bundle, not per range query.
+
+Every window, full or incremental, reaches the sink through one
+observed write (:func:`copy_window`): the row count and the max event
+time an incremental run advances its watermark by come from the
+write's own pass, like the reference's one scan and one WRITE_APPEND.
 """
 
 from __future__ import annotations
 
 import math
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,13 +42,13 @@ from hana_bq_beam_connector_spark.plans.chunking import (
 )
 from hana_bq_beam_connector_spark.sinks import parquet_append
 from hana_bq_beam_connector_spark.sources.jdbc import jdbc_scan
-from hana_bq_beam_connector_spark.tsdomain import window_filter
+from hana_bq_beam_connector_spark.tsdomain import ts_numeric, window_filter
 from hana_bq_beam_connector_spark.typemap import stringify
 
-# Every copy mode writes a parquet sink; nothing reads dest_dataset.
+# Every copy mode writes a parquet sink.
 NO_SINK = (
     "dest_path is required: --dest-path (a parquet directory) is the "
-    "only sink this build writes; --dest-dataset is not written to"
+    "only sink this build writes"
 )
 
 
@@ -85,7 +91,8 @@ def run_copy_pipeline(
     ``source_df`` supplies a non-JDBC source (the parquet test
     stand-in); with a JDBC config each interval becomes one range
     query via ``predicates=``, packed into :func:`chunk_tasks` tasks.
-    The caller (or :func:`run_and_append`) triggers the sink action.
+    The caller (or :func:`copy_window`) triggers the sink action.  An
+    empty window plans no intervals.
     """
     if source_df is None:
         df = jdbc_scan(spark, config)  # schema probe; re-read chunked below
@@ -147,23 +154,52 @@ def _assert_jdbc_tz_consistent(spark: SparkSession, ts_dtype: str) -> None:
     )
 
 
+def copy_window(
+    spark: SparkSession,
+    config: PipelineConfig,
+    source_df: DataFrame | None = None,
+) -> tuple[int, int | float | None]:
+    """Copy the configured window into the sink in one observed write;
+    returns (rows written, max of the time column in its canonical
+    numeric domain, or None when nothing was written).
+
+    Both figures ride the write itself via an ``Observation`` on the
+    *typed* frame, before any ``stringify`` (a stringified max compares
+    lexicographically, "999" > "1000"): one source pass, and they
+    describe exactly what the sink received, also when rows land in
+    the source between planning and the write.  The max stays in the
+    canonical integer domain (tsdomain): a double cast rounds past the
+    53-bit mantissa.  A window the planner finds empty writes nothing:
+    Spark would append an empty part file for an empty frame."""
+    from pyspark.sql import Observation
+
+    if config.dest_path is None:
+        raise ValueError(NO_SINK)
+    result, intervals = run_copy_pipeline(
+        spark, replace(config, stringify=False), source_df
+    )
+    if not intervals:
+        return 0, None
+    name, dtype = resolve_column(result, config.timestamp_column)
+    obs = Observation()
+    observed = result.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.max(ts_numeric(name, dtype)).alias("mx"),
+    )
+    parquet_append(
+        stringify(observed) if config.stringify else observed,
+        config.dest_path,
+    )
+    got = obs.get
+    return int(got["n"]), got["mx"]
+
+
 def run_and_append(
     spark: SparkSession,
     config: PipelineConfig,
     source_df: DataFrame | None = None,
 ) -> int:
-    """Execute the copy into the configured sink; returns rows written.
-
-    The row count rides the write itself via an ``Observation`` — one
-    source pass, and the number reported is exactly what the sink
-    received (a separate pre-count would re-scan the source and could
-    disagree with the write under concurrent source inserts)."""
-    from pyspark.sql import Observation
-
-    if config.dest_path is None:
-        raise ValueError(NO_SINK)
-    result, _ = run_copy_pipeline(spark, config, source_df)
-    obs = Observation()
-    observed = result.observe(obs, F.count(F.lit(1)).alias("n"))
-    parquet_append(observed, config.dest_path)
-    return int(obs.get["n"])
+    """Execute the copy into the configured sink; returns rows written
+    (:func:`copy_window`)."""
+    return copy_window(spark, config, source_df)[0]

@@ -20,7 +20,8 @@ Semantics fixes vs the reference (SURVEY §2a quirks #2/#4):
   ``start`` inclusive, last ``hi`` is ``end`` (honored; the reference
   ignores endTime and hardcodes sentinel 2000000000, HanaToBQ.java:166);
 * concatenation of all interval scans is provably the single scan of
-  ``[start, end)`` — property-tested in tests/test_chunking.py.
+  ``[start, end)`` — property-tested in tests/test_chunking.py (a
+  window with no rows plans no intervals, an empty union).
 """
 
 from __future__ import annotations
@@ -140,10 +141,11 @@ def equi_depth_intervals(
     Scale path: one approxQuantile pass (Greenwald-Khanna, driver holds
     only the sketch) versus the reference's full ROW_NUMBER sort inside
     the source database (HanaToBQ.java:57).  The interval list is tiny
-    (≈ rows/chunk_rows entries) and feeds either
-    ``spark.read.jdbc(predicates=...)`` or a parquet-scan filter union.
+    (≈ rows/chunk_rows entries) and feeds
+    ``spark.read.jdbc(predicates=...)``, one range query per interval.
     The sketch's relative error is a tenth of one chunk's share of the
     window (at most 0.001), so chunks stay balanced at any chunk count.
+    A window with no rows plans no intervals: there is nothing to scan.
     """
     if chunk_rows <= 0:
         raise ValueError(f"chunk_rows must be positive, got {chunk_rows}")
@@ -170,7 +172,7 @@ def equi_depth_intervals(
     try:
         n = windowed.count()
         if n == 0:
-            return [Interval(start, end)]
+            return []
         n_chunks = max(1, math.ceil(n / chunk_rows))
         if n_chunks == 1:
             return [Interval(start, end)]
@@ -202,9 +204,12 @@ def equi_depth_intervals_exact(
     the sorted column becomes a split point (ROW_NUMBER + MOD, the
     literal plan of HanaToBQ.java:57).  Kept for parity testing; the
     global window sort makes it the non-scale path — use
-    :func:`equi_depth_intervals` for real inputs.
+    :func:`equi_depth_intervals` for real inputs.  Like it, a window
+    with no rows plans no intervals.
     """
     windowed = _windowed_ts(df, column, start, end)
+    if windowed.isEmpty():
+        return []
     w = Window.orderBy(F.col("__ts"))
     sampled = (
         windowed.select(

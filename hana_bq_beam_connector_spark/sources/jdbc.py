@@ -30,21 +30,15 @@ def jdbc_scan(
     config: PipelineConfig,
     intervals: list[Interval] | None = None,
     *,
-    partition_column: str | None = None,
-    lower_bound: float | None = None,
-    upper_bound: float | None = None,
-    num_partitions: int | None = None,
     ts_dtype: str | None = None,
 ) -> DataFrame:
     """Read ``config.table_name`` over JDBC.
 
-    Two partitioning modes:
-
-    * ``intervals`` (equi-depth, reference-parity): one Spark partition
-      per planned ``[lo, hi)`` chunk — robust to skewed timestamp
-      distributions;
-    * uniform stride (``partition_column``/bounds/``num_partitions``):
-      Spark's stock mode, fine for near-uniform keys.
+    Without ``intervals`` this is one unpartitioned read (the schema
+    probe the planner runs on).  With them, one Spark partition per
+    planned equi-depth ``[lo, hi)`` chunk — reference parity, and
+    robust to skewed timestamp distributions where Spark's stock
+    uniform-stride partitioning is not.
 
     ``ts_dtype`` is the timestamp column's Spark dtype, used to render
     interval predicates as typed literals (timestamp columns get JDBC
@@ -56,63 +50,22 @@ def jdbc_scan(
     """
     if config.connection_string is None:
         raise ValueError("connection_string is required for jdbc_scan")
-    reader = spark.read
-    if intervals is not None:
-        if ts_dtype is None:
-            from hana_bq_beam_connector_spark.colutil import resolve_column
-
-            probe = spark.read.jdbc(
-                url=config.connection_string,
-                table=config.table_name,
-                properties=config.jdbc_properties,
-            )
-            _, ts_dtype = resolve_column(probe, config.timestamp_column)
-        predicates = intervals_to_jdbc_predicates(
-            intervals, config.timestamp_column, ts_dtype
-        )
-        return reader.jdbc(
+    if intervals is None:
+        return spark.read.jdbc(
             url=config.connection_string,
             table=config.table_name,
-            predicates=predicates,
             properties=config.jdbc_properties,
         )
-    if partition_column is not None:
-        if lower_bound is None or upper_bound is None:
-            raise ValueError(
-                "uniform-stride mode needs lower_bound AND upper_bound "
-                f"for partition_column {partition_column!r} (got "
-                f"{lower_bound!r}, {upper_bound!r}); use intervals= for "
-                "plan-driven chunking without explicit bounds"
-            )
-        # Route stride mode through the option API: the JVM reader
-        # accepts numeric AND date/timestamp-string bounds there,
-        # whereas DataFrameReader.jdbc() applies int(lowerBound) and
-        # would reject '2021-01-01'.  Numeric bounds must still
-        # stringify as INTEGERS: the JVM does bound.toLong for numeric
-        # partition columns, and str(0.0) = '0.0' would throw
-        # NumberFormatException where the old int()-casting path
-        # truncated and worked.
-        def _bound(v) -> str:
-            if isinstance(v, bool):
-                raise ValueError(f"bool is not a JDBC bound: {v!r}")
-            if isinstance(v, (int, float)):
-                return str(int(v))
-            return str(v)
+    if ts_dtype is None:
+        from hana_bq_beam_connector_spark.colutil import resolve_column
 
-        opt_reader = (
-            spark.read.format("jdbc")
-            .option("url", config.connection_string)
-            .option("dbtable", config.table_name)
-            .option("partitionColumn", partition_column)
-            .option("lowerBound", _bound(lower_bound))
-            .option("upperBound", _bound(upper_bound))
-            .option("numPartitions", str(num_partitions or 32))
-        )
-        for k, v in (config.jdbc_properties or {}).items():
-            opt_reader = opt_reader.option(k, v)
-        return opt_reader.load()
-    return reader.jdbc(
+        probe = jdbc_scan(spark, config)
+        _, ts_dtype = resolve_column(probe, config.timestamp_column)
+    return spark.read.jdbc(
         url=config.connection_string,
         table=config.table_name,
+        predicates=intervals_to_jdbc_predicates(
+            intervals, config.timestamp_column, ts_dtype
+        ),
         properties=config.jdbc_properties,
     )

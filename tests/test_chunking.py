@@ -75,10 +75,10 @@ def test_window_restriction(events):
 
 
 def test_empty_window(events):
-    intervals = equi_depth_intervals(
-        events, "ts", chunk_rows=100, start=4e9, end=5e9
-    )
-    assert intervals == [Interval(4e9, 5e9)]
+    """No rows, no chunks: the empty union is still the window's scan,
+    and a copy of it writes nothing."""
+    for planner in (equi_depth_intervals, equi_depth_intervals_exact):
+        assert planner(events, "ts", 100, start=4e9, end=5e9) == []
 
 
 def test_all_equal_timestamps(spark):

@@ -46,10 +46,12 @@ def test_cli_incremental_mode(spark, tmp_path, capsys):
     assert spark.read.parquet(dest).count() == 1000
 
 
-def test_cli_clustered_copy(spark, tmp_path, capsys):
+@pytest.mark.parametrize("cluster_by", ["user_id", "user_id,value"])
+def test_cli_clustered_copy(spark, tmp_path, capsys, cluster_by):
     """--cluster-by lays the copied window out for data skipping:
     one column -> range clustering (disjoint bands), two -> Z-order;
-    row multiset is the same as a plain copy."""
+    row multiset is the same as a plain copy, and the reported count
+    is the sink's."""
     dest = str(tmp_path / "sink_clustered")
     rc = main(
         [
@@ -58,7 +60,7 @@ def test_cli_clustered_copy(spark, tmp_path, capsys):
             "--start-time", "0",
             "--source-parquet", f"{SF}/events.parquet",
             "--dest-path", dest,
-            "--cluster-by", "user_id,value",
+            "--cluster-by", cluster_by,
             "--cluster-files", "8",
             "--master", "local[4]",
         ]
@@ -67,9 +69,9 @@ def test_cli_clustered_copy(spark, tmp_path, capsys):
     assert "rows_copied=1000" in capsys.readouterr().out
     back = spark.read.parquet(dest)
     assert back.count() == 1000
-    assert sorted(back.columns) == sorted(
-        spark.read.parquet(f"{SF}/events.parquet").columns
-    )
+    source = spark.read.parquet(f"{SF}/events.parquet")
+    assert sorted(back.columns) == sorted(source.columns)
+    assert back.exceptAll(source.select(*back.columns)).isEmpty()
 
     # incremental mode rejects clustering loudly
     with pytest.raises(SystemExit):
@@ -92,13 +94,11 @@ def test_cli_required_options():
 
 
 def test_cli_dest_dataset_alone_fails_before_any_job(spark, tmp_path):
-    """--dest-dataset is never written to: without --dest-path the CLI
-    refuses with the message naming --dest-path as the only sink, and
-    submits no Spark job — not even the schema read of a source this
-    session has never seen."""
+    """--dest-dataset is not an option (the parquet --dest-path is the
+    only sink this build writes): argparse rejects it and no Spark job
+    runs — not even the schema read of a source this session has never
+    seen."""
     import shutil
-
-    from hana_bq_beam_connector_spark.pipeline import NO_SINK
 
     src = str(tmp_path / "events.parquet")
     shutil.copyfile(f"{SF}/events.parquet", src)
@@ -118,8 +118,7 @@ def test_cli_dest_dataset_alone_fails_before_any_job(spark, tmp_path):
             )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert str(exc.value) == NO_SINK
-    assert "--dest-path" in NO_SINK
+    assert exc.value.code == 2  # argparse: unrecognized arguments
     jobs = sc.statusTracker().getJobIdsForGroup("cli_no_sink_probe")
     assert list(jobs) == []
 

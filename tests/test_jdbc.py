@@ -75,36 +75,6 @@ def test_jdbc_interval_scan_round_trip(spark, derby_url):
     assert sorted(r["EVENT_ID"] for r in rows) == list(range(N_ROWS))
 
 
-def test_jdbc_uniform_stride_scan(spark, derby_url):
-    cfg = _config(derby_url)
-    df = jdbc_scan(
-        spark,
-        cfg,
-        partition_column="ts",
-        lower_bound=0,
-        upper_bound=10_001,
-        num_partitions=8,
-    )
-    assert df.rdd.getNumPartitions() == 8
-    assert df.count() == N_ROWS
-
-
-def test_jdbc_uniform_stride_float_bounds(spark, derby_url):
-    """Float bounds on a numeric partition column still work through
-    the option API: the JVM does bound.toLong, so str(0.0)='0.0'
-    would throw NumberFormatException — bounds stringify as ints."""
-    cfg = _config(derby_url)
-    df = jdbc_scan(
-        spark,
-        cfg,
-        partition_column="ts",
-        lower_bound=0.0,
-        upper_bound=10_001.0,
-        num_partitions=4,
-    )
-    assert df.count() == N_ROWS
-
-
 def test_jdbc_pushdown_reaches_generated_sql(spark, derby_url):
     cfg = _config(derby_url)
     df = jdbc_scan(spark, cfg, intervals=[Interval(0, 10_001)])
@@ -224,10 +194,15 @@ def test_jdbc_append_sink_round_trip(spark, derby_url):
     assert got == sorted(list(range(50)) + list(range(10)))
 
 
-def test_jdbc_uniform_stride_date_string_bounds(spark, derby_url):
-    """Stride partitioning over a DATE column with ISO-string bounds:
-    the option-based JDBC path accepts them (DataFrameReader.jdbc()
-    would int()-cast and raise) — sources/jdbc.py stride branch."""
+def test_date_column_copy_through_planner(spark, derby_url):
+    """A DATE time column is chunked by the planner like any other:
+    the chunk predicates render as ``{d '...'}`` literals the database
+    accepts, and the chunks together hold every row exactly once."""
+    from hana_bq_beam_connector_spark.pipeline import run_copy_pipeline
+    from hana_bq_beam_connector_spark.plans.chunking import (
+        intervals_to_jdbc_predicates,
+    )
+
     jvm = spark._jvm
     conn = jvm.java.sql.DriverManager.getConnection(derby_url)
     st = conn.createStatement()
@@ -246,21 +221,96 @@ def test_jdbc_uniform_stride_date_string_bounds(spark, derby_url):
         table_name="events_dated",
         timestamp_column="d",
         start_time=0,
-        chunk_size=50,
+        chunk_size=20,
         connection_string=derby_url,
         driver=DERBY_DRIVER,
     )
-    df = jdbc_scan(
-        spark,
-        cfg,
-        partition_column="d",
-        lower_bound="2021-01-01",
-        upper_bound="2021-01-29",
-        num_partitions=4,
+    result, intervals = run_copy_pipeline(spark, cfg)
+    assert len(intervals) == 5
+    preds = intervals_to_jdbc_predicates(intervals, "d", "date")
+    assert all("{d '" in p for p in preds), preds
+    ids = sorted(r["EVENT_ID"] for r in result.collect())
+    assert ids == list(range(100))
+
+
+def _insert(spark, url: str, table: str, rows) -> None:
+    """Insert (ts, event_id) BIGINT pairs into ``table``."""
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    ps = conn.prepareStatement(f"INSERT INTO {table} VALUES (?, ?)")
+    for ts, event_id in rows:
+        ps.setLong(1, ts)
+        ps.setLong(2, event_id)
+        ps.addBatch()
+    ps.executeBatch()
+    conn.close()
+
+
+def test_incremental_counts_rows_inserted_before_the_write(
+    spark, derby_url, tmp_path, monkeypatch
+):
+    """Rows that land in the source after planning but before the
+    write are counted and watermarked with the rows they were written
+    with: the next run copies none of them again."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hana_bq_beam_connector_spark.plans.incremental import (
+        incremental_copy,
     )
-    assert df.rdd.getNumPartitions() == 4
-    assert df.count() == 100
-    assert sorted(r["EVENT_ID"] for r in df.collect()) == list(range(100))
+
+    conn = spark._jvm.java.sql.DriverManager.getConnection(derby_url)
+    conn.createStatement().executeUpdate(
+        "CREATE TABLE events_late (ts BIGINT NOT NULL, event_id BIGINT)"
+    )
+    conn.close()
+    _insert(spark, derby_url, "events_late", ((i, i) for i in range(1000)))
+    real_parquet = DataFrameWriter.parquet
+    late = [(10_000 + k, 1000 + k) for k in range(100)]
+
+    def insert_then_write(self, path, *args, **kwargs):
+        if late:
+            _insert(spark, derby_url, "events_late", late)
+            late.clear()
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", insert_then_write)
+    cfg = PipelineConfig(
+        table_name="events_late",
+        timestamp_column="ts",
+        start_time=0,
+        chunk_size=250,
+        connection_string=derby_url,
+        driver=DERBY_DRIVER,
+        dest_path=str(tmp_path / "sink"),
+        stringify=True,
+    )
+    state = str(tmp_path / "state.json")
+    assert incremental_copy(spark, cfg, state) == 1100
+    files = sorted(_part_files(cfg.dest_path))
+    assert incremental_copy(spark, cfg, state) == 0
+    # an idle run writes nothing, not even an empty part file
+    assert sorted(_part_files(cfg.dest_path)) == files
+    sink = spark.read.parquet(cfg.dest_path)
+    assert sorted(int(r["EVENT_ID"]) for r in sink.collect()) == list(
+        range(1100)
+    )
+
+
+def test_empty_window_copy_writes_nothing(spark, derby_url, tmp_path):
+    """A full copy of a window with no rows returns 0 and creates no
+    sink: Spark would otherwise append an empty part file."""
+    from hana_bq_beam_connector_spark.pipeline import run_and_append
+
+    dest = tmp_path / "sink"
+    cfg = PipelineConfig(
+        table_name="events_jdbc",
+        timestamp_column="ts",
+        start_time=20_000,  # past every row (ts < 10,000)
+        connection_string=derby_url,
+        driver=DERBY_DRIVER,
+        dest_path=str(dest),
+    )
+    assert run_and_append(spark, cfg) == 0
+    assert not dest.exists()
 
 
 def _part_files(path) -> list[str]:
