@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -17,6 +20,9 @@ from pyspark.sql import DataFrame
 # corpus-sized cached frames.  list.append is atomic under the GIL,
 # so pool threads may pin concurrently (rec_user_candidates).
 _SESSION_PINS: list[DataFrame] = []
+# The frames this thread pinned inside its innermost open
+# pins_freed_after() block (unset or None outside one).
+_SCOPE = threading.local()
 
 
 def persist_reused(df: DataFrame) -> DataFrame:
@@ -36,6 +42,9 @@ def persist_reused(df: DataFrame) -> DataFrame:
     pipeline would persist anyway."""
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _SESSION_PINS.append(out)
+    scoped = getattr(_SCOPE, "pins", None)
+    if scoped is not None:
+        scoped.append(out)
     out.count()
     return out
 
@@ -55,6 +64,31 @@ def release_session_pins() -> None:
     fully-collected queries."""
     while _SESSION_PINS:
         _SESSION_PINS.pop().unpersist()
+
+
+@contextmanager
+def pins_freed_after():
+    """Unpersist, on leaving the block, the frames THIS thread pinned
+    inside it, and drop them from the session registry.
+
+    For a block that materializes everything it builds (a write), on a
+    thread that cannot wait for the next :func:`release_session_pins`:
+    a streaming sink's callback pins once per micro-batch, and a
+    blanket release there would free pins a driver-thread query still
+    reads lazily.  Pins made by pool threads the block starts are not
+    its own and stay registered for the session-wide release."""
+    outer = getattr(_SCOPE, "pins", None)
+    _SCOPE.pins = mine = []
+    try:
+        yield
+    finally:
+        _SCOPE.pins = outer
+        for df in mine:
+            df.unpersist()
+            try:
+                _SESSION_PINS.remove(df)
+            except ValueError:  # a release_session_pins() got it first
+                pass
 
 
 def plan_reset(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:

@@ -1,6 +1,5 @@
 from hana_bq_beam_connector_spark.sources.files import (
     load_table,
-    load_tables,
     read_csv,
     read_json,
     read_orc,
@@ -11,7 +10,6 @@ from hana_bq_beam_connector_spark.sources.jdbc import jdbc_scan
 __all__ = [
     "jdbc_scan",
     "load_table",
-    "load_tables",
     "read_csv",
     "read_json",
     "read_orc",

@@ -175,9 +175,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     :func:`read_parquet`: the first load of an unchanged file infers its
     schema, later loads reuse it and submit no Spark job."""
     return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}

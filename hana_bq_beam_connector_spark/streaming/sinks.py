@@ -14,6 +14,10 @@ Two production patterns the window/stateful modules don't cover:
   batch (failure between write and checkpoint commit) OVERWRITES its
   own previous attempt instead of appending duplicates.  This is the
   standard idempotent-writer recipe for sinks without transactions.
+* ``stream_apply_cdc``, ``stream_merge_aggregate`` and
+  ``stream_maintain_fingerprints`` — keyed snapshots maintained by
+  folding each micro-batch into the published one; all three publish
+  through ``_fold_into_snapshot``.
 """
 
 from __future__ import annotations
@@ -21,6 +25,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+
+from hana_bq_beam_connector_spark.operators._common import pins_freed_after
 
 
 def _current_epoch(pointer: str) -> str | None:
@@ -31,20 +37,62 @@ def _current_epoch(pointer: str) -> str | None:
         return fh.read().strip()
 
 
-def _publish_epoch(df: DataFrame, epoch_dir: str, pointer: str) -> None:
-    """The pointer-swap publish shared by every snapshot sink: write
-    the epoch directory, then atomically repoint CURRENT.  Callers
-    must first check ``_current_epoch(pointer) == epoch_dir`` and skip
-    the batch (replay after the swap) — re-applying it would
-    double-count a merge, xor-cancel a fingerprint, or crash the CDC
-    apply on read-write path overlap.  Centralized so a protocol fix
-    (fsync, path normalization, epoch GC) lands once, not three
-    times."""
-    df.write.mode("overwrite").parquet(epoch_dir)
-    tmp = pointer + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(epoch_dir)
-    os.replace(tmp, pointer)
+def _each_batch(stream: DataFrame, checkpoint: str, write_batch):
+    """Start an availableNow query that hands every micro-batch to
+    ``write_batch(batch_df, batch_id)``."""
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _fold_into_snapshot(
+    stream: DataFrame, snapshot_dir: str, checkpoint: str, fold
+):
+    """Maintain a published snapshot as ``fold(current, batch_df)``
+    over the micro-batches — the one pointer-swap publish protocol of
+    every snapshot sink, for sinks without transactions.
+
+    ``{snapshot_dir}/CURRENT`` names the published epoch directory.
+    Batch N reads that snapshot (``None`` before the first publish),
+    writes ``fold(current, batch_df)`` to ``v{N}``, then atomically
+    repoints CURRENT (``os.replace`` of a fully written temp file:
+    readers see the old epoch or the new one, never a torn pointer).
+    Readers resolve CURRENT once and read an immutable directory;
+    ``gc_snapshot_epochs`` deletes superseded ones.
+
+    A micro-batch replays when the process dies before its checkpoint
+    commit, and the replay is exactly-once on both sides of the swap:
+    before it, the replay rewrites the unreferenced ``v{N}`` with the
+    same content and repoints; after it, CURRENT already names ``v{N}``
+    and the batch is skipped — folding it into its own output would
+    count it twice, and would read and overwrite one path.
+
+    The frames the fold pins (``persist_reused``) are freed once the
+    epoch write has materialized them, so a long stream holds no
+    per-batch cache; pins other threads made are left alone."""
+    pointer = os.path.join(snapshot_dir, "CURRENT")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        epoch_dir = os.path.join(snapshot_dir, f"v{batch_id}")
+        cur_path = _current_epoch(pointer)
+        if cur_path == epoch_dir:
+            return
+        cur = (
+            None
+            if cur_path is None
+            else batch_df.sparkSession.read.parquet(cur_path)
+        )
+        with pins_freed_after():
+            fold(cur, batch_df).write.mode("overwrite").parquet(epoch_dir)
+        tmp = pointer + ".tmp"
+        with open(tmp, "w") as fh:
+            fh.write(epoch_dir)
+        os.replace(tmp, pointer)
+
+    return _each_batch(stream, checkpoint, write_batch)
 
 
 def dedup_within_watermark(
@@ -72,12 +120,7 @@ def foreach_batch_idempotent_append(
             f"{base_path}/batch={batch_id}"
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _each_batch(stream, checkpoint, write_batch)
 
 
 def streaming_dedup_against_corpus(
@@ -125,12 +168,7 @@ def streaming_dedup_against_corpus(
             f"{base_path}/batch={batch_id}"
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _each_batch(doc_stream, checkpoint, write_batch)
 
 
 def stream_apply_cdc(
@@ -145,18 +183,11 @@ def stream_apply_cdc(
     """Continuously fold a CDC change stream into a published keyed
     snapshot — the streaming twin of ``plans/cdc.apply_cdc``.
 
-    Snapshot publishing uses the pointer/ping-pong recipe for sinks
-    without transactions: each micro-batch applies its changes to the
-    snapshot named by ``{snapshot_dir}/CURRENT``, writes the result to
-    an epoch-keyed directory (``v{batch_id}``), then atomically swaps
-    the pointer.  Replays are idempotent on BOTH sides of the swap: a
-    failure before it rewrites the (unreferenced) epoch directory with
-    identical content and re-points; a failure after it is detected at
-    batch start (pointer already names this batch's epoch) and the
-    apply is skipped — so the published snapshot is exactly-once.
-    Readers resolve CURRENT once and read an immutable
-    directory; a compaction job can delete epochs older than any
-    running reader.
+    Each micro-batch is ``apply_cdc``-ed onto the current snapshot (an
+    empty frame of the change columns before the first publish) and
+    published by ``_fold_into_snapshot``.  A batch folded twice would
+    read and overwrite its own epoch directory — Spark refuses that
+    write, so the query would crash-loop on the replay.
 
     At scale the per-batch cost is one co-partitioned anti-join +
     union of the change batch against the snapshot (bounded by delta
@@ -172,43 +203,23 @@ def stream_apply_cdc(
     """
     from hana_bq_beam_connector_spark.plans.cdc import apply_cdc
 
-    pointer = os.path.join(snapshot_dir, "CURRENT")
+    drop = {op_col} | ({seq_col} if seq_col else set())
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        drop = {op_col} | ({seq_col} if seq_col else set())
-        base_cols = [c for c in batch_df.columns if c not in drop]
-        epoch_dir = os.path.join(snapshot_dir, f"v{batch_id}")
-        cur_path = _current_epoch(pointer)
-        if cur_path == epoch_dir:
-            # Replay after the pointer swap (failure landed between
-            # os.replace and the checkpoint commit): this batch's
-            # epoch is already published.  Reading it as the base
-            # and overwriting the same path would raise "cannot
-            # overwrite a path that is also being read from" —
-            # skip, the published snapshot is already correct.
-            return
-        base = (
-            spark.read.parquet(cur_path)
-            if cur_path is not None
-            else batch_df.select(*base_cols).limit(0)
-        )
-        out = apply_cdc(
-            base,
+    def fold(cur: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        if cur is None:
+            cur = batch_df.select(
+                *[c for c in batch_df.columns if c not in drop]
+            ).limit(0)
+        return apply_cdc(
+            cur,
             batch_df,
             key=key,
             op_col=op_col,
             seq_col=seq_col,
             validate=validate,
         )
-        _publish_epoch(out, epoch_dir, pointer)
 
-    return (
-        changes.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_into_snapshot(changes, snapshot_dir, checkpoint, fold)
 
 
 def read_cdc_snapshot(spark, snapshot_dir: str) -> DataFrame:
@@ -269,75 +280,52 @@ def stream_merge_aggregate(
 
     Each micro-batch reduces to its own per-key partials (map-side
     combined — the batch's raw rows never shuffle past the first
-    aggregate), full-outer-merges them with the current snapshot by
-    key, and publishes via the same epoch-dir/pointer swap as
-    ``stream_apply_cdc`` — idempotent on replay, exactly-once
-    publish.  Sums accumulate through DECIMAL(18,2) so the maintained
-    view equals the from-scratch batch aggregate exactly, not
-    approximately.  Snapshot size is O(distinct keys); at 10^9 keys
-    bucket the snapshot on the key so the merge join never shuffles
-    the big side.
+    aggregate), which are full-outer-merged with the current snapshot
+    by key and published by ``_fold_into_snapshot``.  A batch folded
+    twice would be counted twice.  Sums accumulate through
+    DECIMAL(18,2) so the maintained view equals the from-scratch batch
+    aggregate exactly, not approximately.  Snapshot size is O(distinct
+    keys); at 10^9 keys bucket the snapshot on the key so the merge
+    join never shuffles the big side.
     """
     from pyspark.sql import functions as F
 
-    pointer = os.path.join(snapshot_dir, "CURRENT")
+    zero = F.lit(0).cast("decimal(18,2)")
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        epoch_dir = os.path.join(snapshot_dir, f"v{batch_id}")
+    def fold(cur: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         part = batch_df.groupBy(*keys).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col(value_col).cast("decimal(18,2)")).alias("total"),
         )
-        cur_path = _current_epoch(pointer)
-        if cur_path == epoch_dir:
-            # Already published by a pre-checkpoint-commit replay
-            # (see stream_apply_cdc): merging again would DOUBLE-
-            # COUNT this batch into the running aggregate.
-            return
-        if cur_path is not None:
-            cur = spark.read.parquet(cur_path)
-            merged = (
-                cur.select(
-                    *keys,
-                    F.col("n").alias("n_old"),
-                    F.col("total").alias("t_old"),
-                )
-                .join(
-                    part.select(
-                        *keys,
-                        F.col("n").alias("n_new"),
-                        F.col("total").alias("t_new"),
-                    ),
-                    on=keys,
-                    how="full_outer",
-                )
-                .select(
-                    *keys,
-                    (
-                        F.coalesce(F.col("n_old"), F.lit(0))
-                        + F.coalesce(F.col("n_new"), F.lit(0))
-                    ).alias("n"),
-                    (
-                        F.coalesce(
-                            F.col("t_old"), F.lit(0).cast("decimal(18,2)")
-                        )
-                        + F.coalesce(
-                            F.col("t_new"), F.lit(0).cast("decimal(18,2)")
-                        )
-                    ).cast("decimal(18,2)").alias("total"),
-                )
+        if cur is None:
+            return part
+        return (
+            cur.select(
+                *keys, F.col("n").alias("n_old"), F.col("total").alias("t_old")
             )
-        else:
-            merged = part
-        _publish_epoch(merged, epoch_dir, pointer)
+            .join(
+                part.select(
+                    *keys,
+                    F.col("n").alias("n_new"),
+                    F.col("total").alias("t_new"),
+                ),
+                on=keys,
+                how="full_outer",
+            )
+            .select(
+                *keys,
+                (
+                    F.coalesce(F.col("n_old"), F.lit(0))
+                    + F.coalesce(F.col("n_new"), F.lit(0))
+                ).alias("n"),
+                (
+                    F.coalesce(F.col("t_old"), zero)
+                    + F.coalesce(F.col("t_new"), zero)
+                ).cast("decimal(18,2)").alias("total"),
+            )
+        )
 
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_into_snapshot(events, snapshot_dir, checkpoint, fold)
 
 
 def streaming_dedup_self_extending(
@@ -369,10 +357,6 @@ def streaming_dedup_self_extending(
     resolved here — run the batch pair operator on ingest batches
     where that matters.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from hana_bq_beam_connector_spark.operators.dedup import (
         band_table,
         corpus_dedup_index,
@@ -439,12 +423,7 @@ def streaming_dedup_self_extending(
             "overwrite"
         ).parquet(f"{bands_dir}/batch_{batch_id}")
 
-    return (
-        doc_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _each_batch(doc_stream, checkpoint, write_batch)
 
 
 def compact_dedup_index(spark, index_dir: str) -> dict:
@@ -527,14 +506,12 @@ def stream_maintain_fingerprints(
     At 100 TB you don't re-checksum the corpus per verification run;
     you fold each arriving micro-batch's per-bucket partials (count,
     key XOR, key sum, full-row hash XOR, measure sums — all mergeable:
-    counts/sums add, XORs xor) into a published fingerprint snapshot.
-    ``reconcile_chunks`` can then diff this snapshot against the
-    sink's at any moment without touching source history.  Publishing
-    uses the same epoch-dir/pointer swap as ``stream_apply_cdc``
-    (idempotent on replay: an already-published epoch is detected and
-    skipped, since re-XORing a batch would silently CANCEL its keys
-    out of the fingerprint — the worst kind of wrong, a corruption
-    the verify tool itself introduced).
+    counts/sums add, XORs xor) into a fingerprint snapshot published
+    by ``_fold_into_snapshot``.  ``reconcile_chunks`` can then diff
+    this snapshot against the sink's at any moment without touching
+    source history.  A batch folded twice would XOR its keys back OUT
+    of the fingerprint — the worst kind of wrong, a corruption the
+    verify tool itself introduced.
 
     ``full_row``/``measure_cols`` mirror ``chunk_fingerprints``; the
     fingerprint SHAPE is part of the snapshot's contract — changing
@@ -550,11 +527,7 @@ def stream_maintain_fingerprints(
         merge_fingerprints,
     )
 
-    pointer = os.path.join(snapshot_dir, "CURRENT")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        epoch_dir = os.path.join(snapshot_dir, f"v{batch_id}")
+    def fold(cur: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         part = chunk_fingerprints(
             batch_df,
             ts_col,
@@ -563,21 +536,6 @@ def stream_maintain_fingerprints(
             full_row=full_row,
             measure_cols=measure_cols,
         )
-        cur_path = _current_epoch(pointer)
-        if cur_path == epoch_dir:
-            return  # replayed after publish: merging again would
-            # xor the batch back OUT of the fingerprint
-        if cur_path is not None:
-            merged = merge_fingerprints(
-                spark.read.parquet(cur_path), part
-            )
-        else:
-            merged = part
-        _publish_epoch(merged, epoch_dir, pointer)
+        return part if cur is None else merge_fingerprints(cur, part)
 
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _fold_into_snapshot(events, snapshot_dir, checkpoint, fold)

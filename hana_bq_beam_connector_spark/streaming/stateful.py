@@ -127,86 +127,3 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-_TWS_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-        StructField("max_value", DoubleType()),
-    ]
-)
-
-
-def tws_user_totals(events: DataFrame) -> DataFrame:
-    """Per-user lifetime (count, sum, max) on Spark 4's
-    ``transformWithStateInPandas`` — the successor stateful API.
-
-    Differences from ``applyInPandasWithState`` that matter at scale:
-    typed per-state-variable handles (ValueState/ListState/MapState)
-    instead of one monolithic state tuple, per-variable TTL, event- or
-    processing-time timers for key eviction without a batch touching
-    the key, and a REQUIRED RocksDB state store — per-key state spills
-    to local disk, so the store is bounded by SSD, not executor heap
-    (the difference between 10^8 and 10^10 tracked keys).  Semantics
-    here mirror :func:`stateful_user_totals` (plus max) so the test
-    can assert equivalence against the same batch aggregate.
-
-    ENV-GATED: the PySpark side of this API talks to the JVM state
-    server over protobuf, and the ``protobuf`` package is not in this
-    container — the equivalence test skips here and runs wherever it
-    is installed (same gating pattern as the BigQuery sink).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Totals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals",
-                StructType(
-                    [
-                        StructField("n", LongType()),
-                        StructField("total", DoubleType()),
-                        StructField("mx", DoubleType()),
-                    ]
-                ),
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timer_values
-        ) -> Iterator[pd.DataFrame]:
-            if self._totals.exists():
-                n, total, mx = self._totals.get()
-            else:
-                n, total, mx = 0, 0.0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                mx = max(mx, float(pdf["value"].max()))
-            self._totals.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_Totals(),
-            outputStructType=_TWS_OUT,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

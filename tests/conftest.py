@@ -18,7 +18,7 @@ _SESSION = None
 @pytest.fixture(scope="session")
 def spark():
     global _SESSION
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     _SESSION = get_spark(app_name="tests", master=f"local[{cpus}]")
     yield _SESSION
 

@@ -15,12 +15,14 @@ from hana_bq_beam_connector_spark.plans.incremental import (
 from hana_bq_beam_connector_spark.config import PipelineConfig
 from hana_bq_beam_connector_spark.queries.streaming import (
     stream_session_windows,
+    stream_sliding_1h_30m,
     stream_tumbling_1h,
 )
 from hana_bq_beam_connector_spark.streaming.windows import (
     events_stream,
     run_available_now,
     session_agg,
+    sliding_agg,
     tumbling_agg,
 )
 
@@ -36,24 +38,41 @@ def stream_dir(tmp_path_factory, sf_dir):
     return str(d)
 
 
-def test_streaming_tumbling_equals_batch(spark, stream_dir, tmp_path):
+@pytest.mark.parametrize(
+    "agg, batch, keys",
+    [
+        pytest.param(
+            tumbling_agg,
+            stream_tumbling_1h,
+            ("window_start", "event_type"),
+            id="tumbling",
+        ),
+        pytest.param(
+            sliding_agg, stream_sliding_1h_30m, ("window_start",), id="sliding"
+        ),
+    ],
+)
+def test_streaming_tumbling_equals_batch(
+    spark, stream_dir, tmp_path, agg, batch, keys
+):
+    """The live tumbling (1h) and sliding (1h every 30m) windows equal
+    their oracle-checked batch replays, window for window."""
     stream = events_stream(spark, stream_dir)
     assert stream.isStreaming
-    run_available_now(
-        tumbling_agg(stream), "tumbling_t", str(tmp_path / "ckpt1")
-    )
+    name = f"{agg.__name__}_t"
+    run_available_now(agg(stream), name, str(tmp_path / "ckpt1"))
     got = {
-        (int(r["window_start"].timestamp() * 1_000_000), r["event_type"]): (
-            r["n_events"],
-            r["total_value"],
-        )
-        for r in spark.sql("SELECT * FROM tumbling_t").collect()
+        (
+            int(r["window_start"].timestamp() * 1_000_000),
+            *(r[k] for k in keys[1:]),
+        ): (r["n_events"], r["total_value"])
+        for r in spark.sql(f"SELECT * FROM {name}").collect()
     }
     want = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
-        for r in stream_tumbling_1h(spark, SF).collect()
+        tuple(r[k] for k in keys): (r["n_events"], r["total_value"])
+        for r in batch(spark, SF).collect()
     }
-    assert got == want
+    assert got == want and len(got) > 0
 
 
 def test_streaming_sessions_equal_batch_islands(spark, stream_dir, tmp_path):
@@ -224,79 +243,6 @@ def test_stateful_user_totals_converge_to_batch(
     for uid, (n, total) in final.items():
         assert n == want[uid][0]
         assert total == pytest.approx(want[uid][1], rel=1e-9)
-
-
-def test_tws_user_totals_converge_to_batch(
-    spark, events, stream_dir, tmp_path
-):
-    """transformWithStateInPandas (Spark 4 stateful API, RocksDB
-    store): the final update per user equals the batch lifetime
-    aggregate — same contract as the applyInPandasWithState twin.
-
-    ENV-GATED like the BigQuery sink: the API's state-server protocol
-    needs the ``protobuf`` Python package, which this container does
-    not ship (verified: the query fails in PRE_INIT importing
-    ``google.protobuf``).  The operator is interface-complete; this
-    test runs wherever protobuf exists."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf "
-        "(not shipped in this container)",
-    )
-    from hana_bq_beam_connector_spark.streaming.stateful import (
-        tws_user_totals,
-    )
-    from hana_bq_beam_connector_spark.streaming.windows import events_stream
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = events_stream(spark, stream_dir)
-        run_available_now(
-            tws_user_totals(stream),
-            "tws_totals_t",
-            str(tmp_path / "ckpt_tws"),
-            mode="update",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-    final = {
-        r["user_id"]: (r["n_events"], r["total_value"], r["max_value"])
-        for r in spark.sql(
-            """SELECT user_id, n_events, total_value, max_value FROM (
-                 SELECT *, ROW_NUMBER() OVER (
-                   PARTITION BY user_id ORDER BY n_events DESC) AS rn
-                 FROM tws_totals_t) WHERE rn = 1"""
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["t"], r["m"])
-        for r in events.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("value").alias("t"),
-            F.max("value").alias("m"),
-        )
-        .collect()
-    }
-    assert set(final) == set(want)
-    for uid, (n, total, mx) in final.items():
-        assert n == want[uid][0]
-        assert total == pytest.approx(want[uid][1], rel=1e-9)
-        assert mx == want[uid][2]
 
 
 def test_stream_stream_interval_join_equals_batch(
@@ -789,6 +735,107 @@ def test_stream_apply_cdc_publishes_exact_snapshot(spark, tmp_path):
     )
     want = {(r["k"], r["v"]) for r in want_df.collect()}
     assert got == want == {(1, "a"), (2, "B"), (9, "i")}
+
+
+@pytest.mark.parametrize("seq_col", [None, "seq"])
+def test_stream_apply_cdc_frees_its_pins(spark, tmp_path, seq_col):
+    """Both validating branches of apply_cdc pin the change batch; the
+    sink frees each batch's pins once its epoch is written, so after
+    several micro-batches nothing stays cached — and the published
+    snapshot is still the batch apply of all changes (disjoint keys
+    per file, so file order is irrelevant)."""
+    from hana_bq_beam_connector_spark.plans.cdc import apply_cdc
+    from hana_bq_beam_connector_spark.streaming.sinks import (
+        read_cdc_snapshot,
+        stream_apply_cdc,
+    )
+
+    schema = "k long, v string, op string, seq long"
+    rows = []
+    for i in range(4):
+        # per file: an insert, an insert deleted later in the same
+        # file (D wins on both branches), an upsert of a new key
+        rows.append([
+            (10 * i + 1, f"a{i}", "I", 1),
+            (10 * i + 2, f"b{i}", "I", 2),
+            (10 * i + 2, None, "D", 3),
+            (10 * i + 3, f"c{i}", "U", 4),
+        ])
+    if seq_col is None:
+        schema = schema.removesuffix(", seq long")
+        rows = [[r[:3] for r in batch] for batch in rows]
+    src = tmp_path / "cdc_in"
+    for i, batch in enumerate(rows):
+        spark.createDataFrame(batch, schema).coalesce(1).write.parquet(
+            str(src / f"f{i}")
+        )
+    changes = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+    snap_dir = str(tmp_path / "snap")
+    spark.catalog.clearCache()
+    q = stream_apply_cdc(
+        changes,
+        snap_dir,
+        key="k",
+        checkpoint=str(tmp_path / "ckpt"),
+        seq_col=seq_col,
+    )
+    q.awaitTermination()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    got = {
+        (r["k"], r["v"])
+        for r in read_cdc_snapshot(spark, snap_dir).collect()
+    }
+    all_changes = spark.createDataFrame(
+        [r for batch in rows for r in batch], schema
+    )
+    want_df = apply_cdc(
+        spark.createDataFrame([], "k long, v string"),
+        all_changes,
+        "k",
+        seq_col=seq_col,
+        validate=False,
+    )
+    want = {(r["k"], r["v"]) for r in want_df.collect()}
+    assert got == want
+    assert len(got) == 8
+
+
+def test_pins_freed_after_keeps_other_threads_pins(spark):
+    """The sink's scoped release frees only the pins its own thread
+    made inside the block: a pin another thread makes meanwhile (a
+    driver-thread query beside the stream) stays cached until
+    release_session_pins()."""
+    import threading
+
+    from hana_bq_beam_connector_spark.operators._common import (
+        persist_reused,
+        pins_freed_after,
+        release_session_pins,
+    )
+
+    release_session_pins()
+    spark.catalog.clearCache()
+    other = {}
+
+    def pin_elsewhere():
+        other["df"] = persist_reused(spark.range(10).selectExpr("id * 3"))
+
+    with pins_freed_after():
+        mine = persist_reused(spark.range(10).selectExpr("id * 2"))
+        t = threading.Thread(target=pin_elsewhere)
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive()
+    assert not mine.is_cached
+    assert other["df"].is_cached
+    release_session_pins()
+    assert not other["df"].is_cached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_stream_merge_aggregate_equals_batch_aggregate(
