@@ -1,9 +1,11 @@
 """Multimodal column operators (LLM-data surface).
 
 Image/audio/video travel as opaque ``binary`` columns plus typed
-metadata structs; decode/feature steps are Arrow-batched
-``mapInPandas`` stages so each executor processes columnar batches —
-the Spark-side plumbing (schema, batch shape, partition flow) is real
+metadata structs.  Every 1:1 decode/feature step is a pandas UDF over
+the payload column alone (``_payload_stats``), so it chains with an
+upstream ``synthesize_*`` UDF into one ArrowEvalPython node; only the
+1:N frame fan-outs (``_payload_rows``) are ``mapInPandas`` stages.
+The Spark-side plumbing (schema, batch shape, partition flow) is real
 and tested.
 
 Every decoder is REAL and stdlib-only: ``decode_pgm`` parses binary
@@ -93,7 +95,7 @@ def documents_as_media(df: DataFrame) -> DataFrame:
     )
 
 
-def _payload_stats(media: DataFrame, schema, per_payload) -> DataFrame:
+def _payload_stats(media: DataFrame, schema, per_batch) -> DataFrame:
     """1:1 payload→stats decode spelled as a scalar (series→series)
     pandas UDF over ONLY the payload column (r11, guide §4).
 
@@ -102,20 +104,20 @@ def _payload_stats(media: DataFrame, schema, per_payload) -> DataFrame:
     ExtractPythonUDFs *chain* the decoder with an upstream
     synthesizer UDF into a single ArrowEvalPython node — one Python
     worker per task instead of two, and the payload bytes never
-    round-trip through the JVM between synth and decode.  ``schema``
-    is the op's public output schema (media_id first); ``per_payload``
-    returns the stat values in that field order.  Rows 1:1, values
-    identical to the former mapInPandas spelling."""
+    round-trip through the JVM between synth and decode (the unfused
+    JPEG/Y4M rows were the r11 bench's only real regression).
+    ``schema`` is the op's public output schema (media_id first);
+    ``per_batch`` receives the Arrow batch's payloads as a list of
+    ``bytes`` and yields one tuple of the remaining fields per payload,
+    in order — whole-batch so a codec with a data-parallel tail (JPEG's
+    one-GEMM-per-batch IDCT) can run it once per batch."""
     fields = [f for f in schema.fields if f.name != "media_id"]
     names = [f.name for f in fields]
 
     @F.pandas_udf(StructType(fields))
     def st(payloads: pd.Series) -> pd.DataFrame:
-        rows = {n: [] for n in names}
-        for payload in payloads:
-            for n, v in zip(names, per_payload(bytes(payload))):
-                rows[n].append(v)
-        return pd.DataFrame(rows)
+        rows = list(per_batch([bytes(p) for p in payloads]))
+        return pd.DataFrame.from_records(rows, columns=names)
 
     return media.select(
         F.col("media_id").cast("long").alias("media_id"),
@@ -123,34 +125,70 @@ def _payload_stats(media: DataFrame, schema, per_payload) -> DataFrame:
     ).select("media_id", "__st.*")
 
 
-def _payload_stats_batch(media: DataFrame, schema, per_batch) -> DataFrame:
-    """Batch-aware twin of :func:`_payload_stats` (r12, guide §4) for
-    decoders whose data-parallel tail is cheapest run over the WHOLE
-    Arrow batch at once (JPEG's one-GEMM-per-batch IDCT).
-
-    ``per_batch`` receives the batch's payloads as a list of ``bytes``
-    and returns one column list per non-id output field, in ``schema``
-    field order, value ``i`` belonging to payload ``i`` (strictly
-    1:1).  Same chaining property as the scalar twin: the decode
-    fuses with an upstream synthesizer UDF into a single
-    ArrowEvalPython node — the unfused JPEG/Y4M rows were the r11
-    bench's only real regression (2 Python nodes × 32 near-empty
-    tasks cost ~1.3 s of pure boundary overhead at sf0.1)."""
-    fields = [f for f in schema.fields if f.name != "media_id"]
-    names = [f.name for f in fields]
-
-    @F.pandas_udf(StructType(fields))
-    def st(payloads: pd.Series) -> pd.DataFrame:
-        cols = per_batch([bytes(p) for p in payloads])
-        return pd.DataFrame(dict(zip(names, cols)))
-
-    return media.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        st(F.col("payload")).alias("__st"),
-    ).select("media_id", "__st.*")
+def _each(per_payload):
+    """Lift a ``payload -> stats tuple`` decoder to a per-batch body."""
+    return lambda payloads: map(per_payload, payloads)
 
 
-_PGM_STATS_SCHEMA = StructType(
+def _payload_rows(media: DataFrame, schema, per_payload) -> DataFrame:
+    """1:N payload→rows fan-out inside the Arrow batch (no shuffle): a
+    clip explodes into its frames in one ``mapInPandas`` stage.
+    ``per_payload`` yields one tuple of the non-id ``schema`` fields
+    per output row; the row's media_id is its payload's."""
+    names = schema.fieldNames()
+
+    def fan_out(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (media_id, *row)
+                for media_id, payload in zip(pdf["media_id"], pdf["payload"])
+                for row in per_payload(bytes(payload))
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return media.mapInPandas(fan_out, schema=schema)
+
+
+def _synthesized(
+    df: DataFrame, id_col: str, encode, media_type: str
+) -> DataFrame:
+    """The media table every ``synthesize_*`` returns: ids spread to
+    the Python-stage width, ``encode`` (a batch of ids → one payload
+    per id) run as a pandas UDF, then the (media_id, payload,
+    media_type, byte_len) shape of ``MEDIA_SCHEMA``."""
+
+    @F.pandas_udf(BinaryType())
+    def payload(ids: pd.Series) -> pd.Series:
+        return pd.Series(encode(ids))
+
+    return spread(
+        df.select(id_col),
+        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
+    ).select(
+        F.col(id_col).cast("long").alias("media_id"),
+        payload(F.col(id_col)).alias("payload"),
+        F.lit(media_type).alias("media_type"),
+    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+
+
+def _gray_rasters(payloads: list[bytes], parse) -> list["object"]:
+    """Decode grayscale payloads with ``parse`` (any of the suite's
+    (w, h, raster)-returning codecs) into (h, w) uint8 rasters.  JPEG
+    decodes share one batched numpy IDCT pass (round 11) — same
+    rasters, one GEMM pair per Arrow batch instead of one per image;
+    the other codecs have no heavy data-parallel tail to batch."""
+    import numpy as np
+
+    if parse is _parse_jpeg:
+        return _jpeg_rasters_batch(payloads)
+    rasters = []
+    for payload in payloads:
+        w, h, raster = parse(payload)
+        rasters.append(np.frombuffer(raster, dtype=np.uint8).reshape(h, w))
+    return rasters
+
+
+_GRAY_STATS_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
         StructField("width", LongType()),
@@ -161,6 +199,28 @@ _PGM_STATS_SCHEMA = StructType(
         StructField("px_max", LongType()),
     ]
 )
+
+
+def _gray_stats(media: DataFrame, parse) -> DataFrame:
+    """Exact per-image pixel stats of a grayscale codec — the one
+    stage behind ``decode_pgm/png/gif/jpeg``.  Integer sum/min/max
+    over the decoded raster keep the oracle comparison bit-strict."""
+
+    def batch(payloads: list[bytes]):
+        import numpy as np
+
+        for a in _gray_rasters(payloads, parse):
+            h, w = a.shape
+            yield (
+                w,
+                h,
+                a.size,
+                int(a.sum(dtype=np.int64)),
+                int(a.min()),
+                int(a.max()),
+            )
+
+    return _payload_stats(media, _GRAY_STATS_SCHEMA, batch)
 
 
 def synthesize_pgm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -174,8 +234,7 @@ def synthesize_pgm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     one).  Built in an Arrow-batched pandas UDF: byte assembly is
     per-row imperative work, the declared Python swap point."""
 
-    @F.pandas_udf(BinaryType())
-    def _pgm(ids: pd.Series) -> pd.Series:
+    def encode(ids: pd.Series) -> list[bytes]:
         import numpy as np
 
         # One arange reused across the batch; per-image raster is a
@@ -194,16 +253,9 @@ def synthesize_pgm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 .tobytes()
             )
             out.append(b"P5\n%d %d\n255\n" % (w, h) + raster)
-        return pd.Series(out)
+        return out
 
-    return spread(
-        df.select(id_col),
-        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
-    ).select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _pgm(F.col(id_col)).alias("payload"),
-        F.lit("image/x-portable-graymap").alias("media_type"),
-    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+    return _synthesized(df, id_col, encode, "image/x-portable-graymap")
 
 
 def _parse_pnm(
@@ -270,22 +322,7 @@ def decode_pgm(media: DataFrame) -> DataFrame:
     another (or for a PIL call) changes no schema, partitioning, or
     caller.  Stats are exact integers (sum/min/max over raster
     bytes) so the oracle comparison is bit-strict."""
-
-    def decode(payload: bytes):
-        import numpy as np
-
-        w, h, raster = _parse_pgm(payload)
-        a = np.frombuffer(raster, dtype=np.uint8)
-        return (
-            w,
-            h,
-            len(raster),
-            int(a.sum(dtype=np.int64)),
-            int(a.min()),
-            int(a.max()),
-        )
-
-    return _payload_stats(media, _PGM_STATS_SCHEMA, decode)
+    return _gray_stats(media, _parse_pgm)
 
 
 _WAV_STATS_SCHEMA = StructType(
@@ -309,8 +346,7 @@ def synthesize_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     4001) - 2000``) so an SQL oracle can replay the sample arithmetic
     without parsing bytes."""
 
-    @F.pandas_udf(BinaryType())
-    def _wav(ids: pd.Series) -> pd.Series:
+    def encode(ids: pd.Series) -> list[bytes]:
         import io
         import wave
 
@@ -339,16 +375,33 @@ def synthesize_wav(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 w.setframerate(rate)
                 w.writeframes(pcm)
             out.append(buf.getvalue())
-        return pd.Series(out)
+        return out
 
-    return spread(
-        df.select(id_col),
-        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
-    ).select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _wav(F.col(id_col)).alias("payload"),
-        F.lit("audio/wav").alias("media_type"),
-    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+    return _synthesized(df, id_col, encode, "audio/wav")
+
+
+def _pcm16(payload: bytes, who: str) -> tuple[int, int, "object"]:
+    """Read a mono 16-bit PCM WAV payload via the stdlib ``wave``
+    parser (validates the RIFF header, fmt chunk and frame count;
+    raises ``wave.Error`` on malformed bytes).  Any other layout is a
+    loud ValueError naming ``who``, not silent garbage.  Returns
+    ``(sample_rate, n_frames, samples)`` with the samples widened to
+    int64, so no later abs / sum / square can wrap."""
+    import io
+    import wave
+
+    import numpy as np
+
+    with wave.open(io.BytesIO(payload), "rb") as w:
+        ch, width = w.getnchannels(), w.getsampwidth()
+        if ch != 1 or width != 2:
+            raise ValueError(
+                f"{who}: media is {ch}ch/{8 * width}-bit; only mono "
+                "PCM16 is supported"
+            )
+        rate, n = w.getframerate(), w.getnframes()
+        frames = w.readframes(n)
+    return rate, n, np.frombuffer(frames, dtype="<i2").astype(np.int64)
 
 
 def decode_wav(media: DataFrame) -> DataFrame:
@@ -360,34 +413,15 @@ def decode_wav(media: DataFrame) -> DataFrame:
     (Σ|s|, peak) keep the oracle comparison bit-strict."""
 
     def decode(payload: bytes):
-        import io
-        import wave
-
-        import numpy as np
-
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            ch, width, rate, n = (
-                w.getnchannels(),
-                w.getsampwidth(),
-                w.getframerate(),
-                w.getnframes(),
-            )
-            if ch != 1 or width != 2:
-                raise ValueError(
-                    f"decode_wav: media is "
-                    f"{ch}ch/{8 * width}-bit; only mono PCM16 "
-                    "is supported"
-                )
-            frames = w.readframes(n)
+        rate, n, a = _pcm16(payload, "decode_wav")
         # Vectorized |s| stats (guide §4.2; the former per-sample
-        # generator expressions were ~75% of this stage's task
-        # time).  Widen to int64 BEFORE abs so -32768 cannot wrap.
-        a = np.abs(np.frombuffer(frames, dtype="<i2").astype(np.int64))
+        # generator expressions were ~75% of this stage's task time).
+        a = abs(a)
         # A zero-frame WAV is legal; peak of silence is 0, not a
         # bare max()-of-empty ValueError.
-        return (rate, ch, n, int(a.sum()), int(a.max()) if a.size else 0)
+        return (rate, 1, n, int(a.sum()), int(a.max()) if a.size else 0)
 
-    return _payload_stats(media, _WAV_STATS_SCHEMA, decode)
+    return _payload_stats(media, _WAV_STATS_SCHEMA, _each(decode))
 
 
 def _sniff_image_header(data: bytes) -> tuple[str, int, int, int]:
@@ -488,28 +522,17 @@ def decode_image_meta(media: DataFrame) -> DataFrame:
     GIF/JPEG), and ``media_type`` is the DETECTED mime, trusting
     bytes over caller labels.  Header-only parse: O(header bytes)
     per payload regardless of raster size.  Spelled as the shared
-    chainable batch-stats UDF (r12): the sniff is 1:1 per payload, so
+    chainable stats UDF (r12): the sniff is 1:1 per payload, so
     it fuses with an upstream synthesizer UDF into ONE
     ArrowEvalPython node and ships ONLY the payload column across the
     boundary (the mapInPandas spelling also round-tripped the
     caller's media_type/byte_len columns)."""
 
-    def batch(payloads: list[bytes]) -> list[list]:
-        mimes: list[str] = []
-        byte_lens: list[int] = []
-        widths: list[int] = []
-        heights: list[int] = []
-        channels: list[int] = []
-        for data in payloads:
-            mime, w, h, ch = _sniff_image_header(data)
-            mimes.append(mime)
-            byte_lens.append(len(data))
-            widths.append(w)
-            heights.append(h)
-            channels.append(ch)
-        return [mimes, byte_lens, widths, heights, channels]
+    def meta(data: bytes):
+        mime, w, h, ch = _sniff_image_header(data)
+        return mime, len(data), w, h, ch
 
-    return _payload_stats_batch(media, _DECODED_SCHEMA, batch)
+    return _payload_stats(media, _DECODED_SCHEMA, _each(meta))
 
 
 def frame_sample(media: DataFrame, stride: int = 2) -> DataFrame:
@@ -525,34 +548,15 @@ def frame_sample(media: DataFrame, stride: int = 2) -> DataFrame:
     garbage frames.  Replaces the former byte-window stand-in with
     the identical schema and explode shape."""
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def sample(payload: bytes):
         import numpy as np
 
-        for pdf in batches:
-            ids, idxs, frames, sums = [], [], [], []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, parsed = _parse_y4m(bytes(payload))
-                for f in range(0, len(parsed), stride):
-                    ids.append(media_id)
-                    idxs.append(f)
-                    frames.append(parsed[f])
-                    sums.append(
-                        int(
-                            np.frombuffer(parsed[f], dtype=np.uint8)
-                            .astype(np.int64)
-                            .sum()
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_idx": idxs,
-                    "frame_bytes": frames,
-                    "byte_sum": sums,
-                }
-            )
+        _, _, frames = _parse_y4m(payload)
+        for f in range(0, len(frames), stride):
+            a = np.frombuffer(frames[f], dtype=np.uint8)
+            yield f, frames[f], int(a.sum(dtype=np.int64))
 
-    return media.mapInPandas(sample, schema=_FRAMES_SCHEMA)
+    return _payload_rows(media, _FRAMES_SCHEMA, sample)
 
 
 _RESIZE_STATS_SCHEMA = StructType(
@@ -565,13 +569,6 @@ _RESIZE_STATS_SCHEMA = StructType(
         StructField("px_sum", LongType()),
         StructField("px_min", LongType()),
         StructField("px_max", LongType()),
-    ]
-)
-
-_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("features", ArrayType(DoubleType())),
     ]
 )
 
@@ -589,14 +586,22 @@ _MOMENTS_SCHEMA = StructType(
 )
 
 
-def _raster_array(payload: bytes, parse) -> "object":
-    """Decode a grayscale payload with ``parse`` (any of the suite's
-    (w, h, raster)-returning codecs) into an int64 (h, w) ndarray."""
+def _box(a, factor: int) -> "object":
+    """Area-average (box-filter) downsample of an (h, w) raster: each
+    output pixel is ``floor(sum of its factor×factor input block /
+    factor²)`` in exact int64; ragged edges crop."""
     import numpy as np
 
-    w, h, raster = parse(payload)
-    return np.frombuffer(raster, dtype=np.uint8).reshape(h, w).astype(
-        np.int64
+    h, w = a.shape
+    oh, ow = h // factor, w // factor
+    if oh == 0 or ow == 0:
+        raise ValueError(f"image {w}x{h} smaller than box factor {factor}")
+    return (
+        a[: oh * factor, : ow * factor]
+        .astype(np.int64)
+        .reshape(oh, factor, ow, factor)
+        .sum(axis=(1, 3))
+        // (factor * factor)
     )
 
 
@@ -619,29 +624,12 @@ def resize_box(
     if factor < 1:
         raise ValueError(f"resize factor must be >= 1, got {factor}")
 
-    def rs(payload: bytes):
-        a = _raster_array(payload, parse)
-        h, w = a.shape
-        oh, ow = h // factor, w // factor
-        if oh == 0 or ow == 0:
-            raise ValueError(
-                f"image {w}x{h} smaller than box factor {factor}"
-            )
-        q = (
-            a[: oh * factor, : ow * factor]
-            .reshape(oh, factor, ow, factor)
-            .sum(axis=(1, 3))
-            // (factor * factor)
-        )
-        return (
-            w,
-            h,
-            ow,
-            oh,
-            int(q.sum()),
-            int(q.min()),
-            int(q.max()),
-        )
+    def rs(payloads: list[bytes]):
+        for a in _gray_rasters(payloads, parse):
+            q = _box(a, factor)
+            h, w = a.shape
+            oh, ow = q.shape
+            yield w, h, ow, oh, int(q.sum()), int(q.min()), int(q.max())
 
     return _payload_stats(media, _RESIZE_STATS_SCHEMA, rs)
 
@@ -673,8 +661,8 @@ def raster_hist_features(
         import numpy as np
 
         feats = []
-        for payload in payloads:
-            a = _raster_array(bytes(payload), parse).ravel()
+        for a in _gray_rasters([bytes(p) for p in payloads], parse):
+            a = a.ravel().astype(np.int64)
             counts = np.bincount(a * bins // 256, minlength=bins)
             feats.append((counts / float(a.size)).tolist())
         return pd.Series(feats)
@@ -710,20 +698,9 @@ def resize_box_payload(
         import numpy as np
 
         out = []
-        for payload in payloads:
-            a = _raster_array(bytes(payload), parse)
-            h, w = a.shape
-            oh, ow = h // factor, w // factor
-            if oh == 0 or ow == 0:
-                raise ValueError(
-                    f"image {w}x{h} smaller than box factor {factor}"
-                )
-            q = (
-                a[: oh * factor, : ow * factor]
-                .reshape(oh, factor, ow, factor)
-                .sum(axis=(1, 3))
-                // (factor * factor)
-            ).astype(np.uint8)
+        for a in _gray_rasters([bytes(p) for p in payloads], parse):
+            q = _box(a, factor).astype(np.uint8)
+            oh, ow = q.shape
             out.append(b"P5\n%d %d\n255\n" % (ow, oh) + q.tobytes())
         return pd.Series(out)
 
@@ -760,38 +737,19 @@ def wav_decimate_box(media: DataFrame, factor: int = 2) -> DataFrame:
         raise ValueError(f"decimation factor must be >= 1, got {factor}")
 
     def dc(payload: bytes):
-        import io
-        import wave
-
-        import numpy as np
-
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            ch, width, rate, n = (
-                w.getnchannels(),
-                w.getsampwidth(),
-                w.getframerate(),
-                w.getnframes(),
-            )
-            if ch != 1 or width != 2:
-                raise ValueError(
-                    f"wav_decimate_box: media is "
-                    f"{ch}ch/{8 * width}-bit; only mono PCM16 "
-                    "is supported"
-                )
-            frames_b = w.readframes(n)
-        a = np.frombuffer(frames_b, dtype="<i2").astype(np.int64)
+        rate, n, a = _pcm16(payload, "wav_decimate_box")
         n_out = n // factor
-        q = a[: n_out * factor].reshape(n_out, factor).sum(axis=1)
+        q = abs(a[: n_out * factor].reshape(n_out, factor).sum(axis=1))
         return (
             rate,
             rate // factor,
             n,
             n_out,
-            int(np.abs(q).sum()),
-            int(np.abs(q).max()) if n_out else 0,
+            int(q.sum()),
+            int(q.max()) if n_out else 0,
         )
 
-    return _payload_stats(media, _WAV_DECIMATE_SCHEMA, dc)
+    return _payload_stats(media, _WAV_DECIMATE_SCHEMA, _each(dc))
 
 
 def raster_moments(media: DataFrame, parse=_parse_pgm) -> DataFrame:
@@ -801,43 +759,28 @@ def raster_moments(media: DataFrame, parse=_parse_pgm) -> DataFrame:
     summary a curation filter needs (flag near-black / blown-out /
     low-contrast images) without ever shipping a raster off the
     scanning task.  Exact integers end to end; oracle-replayable.
-    Spelled as the shared chainable batch-stats UDF (r12): moments
+    Spelled as the shared chainable stats UDF (r12): moments
     are 1:1 per payload, so the decode fuses with the synthesizer
     into ONE ArrowEvalPython node (the mapInPandas spelling kept a
     second Python boundary round-tripping every payload)."""
 
-    def batch(payloads: list[bytes]) -> list[list]:
+    def batch(payloads: list[bytes]):
         import numpy as np
 
-        cols: list[list[int]] = [[] for _ in range(7)]
-        # JPEG decodes share one batched numpy IDCT pass (round
-        # 11) — same rasters, one GEMM pair per Arrow batch instead
-        # of one per image; other codecs stay per-image (their
-        # decode has no heavy data-parallel tail to batch).
-        if parse is _parse_jpeg:
-            # Keep the decoded rasters uint8 here; the int64 view
-            # (needed only so px_sum_sq can't overflow) is taken
-            # one image at a time in the loop below — converting
-            # the whole batch up front would hold 8 bytes/pixel
-            # for every image in the Arrow batch simultaneously.
-            rasters = _jpeg_rasters_batch(payloads)
-        else:
-            rasters = None
-        for idx, payload in enumerate(payloads):
-            a = (
-                rasters[idx].astype(np.int64)
-                if rasters is not None
-                else _raster_array(payload, parse)
-            ).ravel()
+        # The int64 view (so px_sum_sq can't overflow) is taken one
+        # image at a time: widening the whole batch up front would
+        # hold 8 bytes/pixel for every image in the Arrow batch.
+        for a in _gray_rasters(payloads, parse):
+            a = a.ravel().astype(np.int64)
             counts = np.bincount(a >> 6, minlength=4)
-            cols[0].append(int(a.size))
-            cols[1].append(int(a.sum()))
-            cols[2].append(int((a * a).sum()))
-            for j in range(4):
-                cols[3 + j].append(int(counts[j]))
-        return cols
+            yield (
+                a.size,
+                int(a.sum()),
+                int((a * a).sum()),
+                *(int(c) for c in counts[:4]),
+            )
 
-    return _payload_stats_batch(media, _MOMENTS_SCHEMA, batch)
+    return _payload_stats(media, _MOMENTS_SCHEMA, batch)
 
 
 _PPM_STATS_SCHEMA = StructType(
@@ -863,8 +806,7 @@ def synthesize_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     that an SQL oracle can replay without parsing bytes — while the
     BYTES are a complete spec-conformant color image."""
 
-    @F.pandas_udf(BinaryType())
-    def _ppm(ids: pd.Series) -> pd.Series:
+    def encode(ids: pd.Series) -> list[bytes]:
         import numpy as np
 
         # Vectorized interleaved-RGB synthesis (guide §4.2): pixel
@@ -883,16 +825,9 @@ def synthesize_ppm(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 .tobytes()
             )
             out.append(b"P6\n%d %d\n255\n" % (w, h) + raster)
-        return pd.Series(out)
+        return out
 
-    return spread(
-        df.select(id_col),
-        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
-    ).select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _ppm(F.col(id_col)).alias("payload"),
-        F.lit("image/x-portable-pixmap").alias("media_type"),
-    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+    return _synthesized(df, id_col, encode, "image/x-portable-pixmap")
 
 
 def decode_ppm(media: DataFrame) -> DataFrame:
@@ -917,7 +852,7 @@ def decode_ppm(media: DataFrame) -> DataFrame:
             int(a.max()),
         )
 
-    return _payload_stats(media, _PPM_STATS_SCHEMA, decode)
+    return _payload_stats(media, _PPM_STATS_SCHEMA, _each(decode))
 
 
 # --------------------------------------------------------------------
@@ -925,18 +860,6 @@ def decode_ppm(media: DataFrame) -> DataFrame:
 # stores rasters verbatim; PNG runs the real DEFLATE pipeline (stdlib
 # zlib), per-scanline predictive filters, and CRC-32-checked chunk
 # framing.  Pure stdlib: zlib + struct.
-
-_PNG_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_pixels", LongType()),
-        StructField("px_sum", LongType()),
-        StructField("px_min", LongType()),
-        StructField("px_max", LongType()),
-    ]
-)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -1032,8 +955,7 @@ def synthesize_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     PNG filters (None/Sub/Up/Average/Paeth), so decoder agreement
     proves every predictor, not just the trivial one."""
 
-    @F.pandas_udf(BinaryType())
-    def _png(ids: pd.Series) -> pd.Series:
+    def encode(ids: pd.Series) -> list[bytes]:
         import struct
         import zlib
 
@@ -1085,16 +1007,9 @@ def synthesize_png(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 + _png_chunk(b"IDAT", zlib.compress(stream.tobytes()))
                 + _png_chunk(b"IEND", b"")
             )
-        return pd.Series(out)
+        return out
 
-    return spread(
-        df.select(id_col),
-        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
-    ).select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _png(F.col(id_col)).alias("payload"),
-        F.lit("image/png").alias("media_type"),
-    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+    return _synthesized(df, id_col, encode, "image/png")
 
 
 def _parse_png(data: bytes) -> tuple[int, int, bytes]:
@@ -1166,24 +1081,9 @@ def decode_png(media: DataFrame) -> DataFrame:
     Unlike the PNM decoders (verbatim rasters), this path exercises a
     genuine compression pipeline — CRC-checked chunk framing, zlib
     DEFLATE, and all five predictive scanline filters — through the
-    SAME mapInPandas stage shape as every other decoder.  Exact
-    integer stats keep the oracle comparison bit-strict."""
-
-    def decode(payload: bytes):
-        import numpy as np
-
-        w, h, raster = _parse_png(payload)
-        a = np.frombuffer(raster, dtype=np.uint8)
-        return (
-            w,
-            h,
-            len(raster),
-            int(a.sum(dtype=np.int64)),
-            int(a.min()),
-            int(a.max()),
-        )
-
-    return _payload_stats(media, _PNG_STATS_SCHEMA, decode)
+    SAME chainable stats-UDF stage as every other grayscale decoder.
+    Exact integer stats keep the oracle comparison bit-strict."""
+    return _gray_stats(media, _parse_png)
 
 
 # --------------------------------------------------------------------
@@ -1222,8 +1122,7 @@ def synthesize_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     planes — so an SQL oracle replays every sampled frame's stats
     from the id alone."""
 
-    @F.pandas_udf(BinaryType())
-    def _y4m(ids: pd.Series) -> pd.Series:
+    def encode(ids: pd.Series) -> list[bytes]:
         import numpy as np
 
         # Vectorized plane synthesis (guide §4.2): each plane is an
@@ -1259,16 +1158,9 @@ def synthesize_y4m(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     .tobytes()
                 )
             out.append(bytes(buf))
-        return pd.Series(out)
+        return out
 
-    return spread(
-        df.select(id_col),
-        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
-    ).select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _y4m(F.col(id_col)).alias("payload"),
-        F.lit("video/x-yuv4mpeg").alias("media_type"),
-    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+    return _synthesized(df, id_col, encode, "video/x-yuv4mpeg")
 
 
 def _parse_y4m(data: bytes) -> tuple[int, int, list[bytes]]:
@@ -1329,48 +1221,31 @@ def decode_y4m(media: DataFrame, frame_stride: int = 2) -> DataFrame:
     if frame_stride < 1:
         raise ValueError(f"frame_stride must be >= 1, got {frame_stride}")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def decode(payload: bytes):
         import numpy as np
 
-        for pdf in batches:
-            rows = {k.name: [] for k in _Y4M_FRAME_SCHEMA.fields}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, frames = _parse_y4m(bytes(payload))
-                ysz = w * h
-                for f in range(0, len(frames), frame_stride):
-                    fa = np.frombuffer(frames[f], dtype=np.uint8)
-                    yp = fa[:ysz]
-                    uv = fa[ysz:]
-                    rows["media_id"].append(media_id)
-                    rows["frame_idx"].append(f)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["n_frames"].append(len(frames))
-                    rows["y_sum"].append(int(yp.sum(dtype=np.int64)))
-                    rows["y_min"].append(int(yp.min()))
-                    rows["y_max"].append(int(yp.max()))
-                    rows["uv_sum"].append(int(uv.sum(dtype=np.int64)))
-            yield pd.DataFrame(rows)
+        w, h, frames = _parse_y4m(payload)
+        for f in range(0, len(frames), frame_stride):
+            fa = np.frombuffer(frames[f], dtype=np.uint8)
+            yp, uv = fa[: w * h], fa[w * h :]
+            yield (
+                f,
+                w,
+                h,
+                len(frames),
+                int(yp.sum(dtype=np.int64)),
+                int(yp.min()),
+                int(yp.max()),
+                int(uv.sum(dtype=np.int64)),
+            )
 
-    return media.mapInPandas(decode, schema=_Y4M_FRAME_SCHEMA)
+    return _payload_rows(media, _Y4M_FRAME_SCHEMA, decode)
 
 
 # --------------------------------------------------------------------
 # GIF — a second real entropy codec, from a different family: LZW is
 # a dictionary coder (PNG's DEFLATE is LZ77 + Huffman).  Pure stdlib:
 # struct only; the LZW bit-packer/unpacker is written out in full.
-
-_GIF_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_pixels", LongType()),
-        StructField("px_sum", LongType()),
-        StructField("px_min", LongType()),
-        StructField("px_max", LongType()),
-    ]
-)
 
 _GIF_MIN_CODE = 8  # 256-entry palette
 _GIF_CLEAR = 256
@@ -1510,8 +1385,7 @@ def synthesize_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     i*13) % 256``) so an SQL oracle replays the pixel arithmetic
     without bytes."""
 
-    @F.pandas_udf(BinaryType())
-    def _gif(ids: pd.Series) -> pd.Series:
+    def encode(ids: pd.Series) -> list[bytes]:
         import struct
 
         import numpy as np
@@ -1548,16 +1422,9 @@ def synthesize_gif(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 + b"\x3b"
             )
             out.append(buf)
-        return pd.Series(out)
+        return out
 
-    return spread(
-        df.select(id_col),
-        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
-    ).select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _gif(F.col(id_col)).alias("payload"),
-        F.lit("image/gif").alias("media_type"),
-    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+    return _synthesized(df, id_col, encode, "image/gif")
 
 
 def _parse_gif(data: bytes) -> tuple[int, int, bytes]:
@@ -1616,23 +1483,9 @@ def decode_gif(media: DataFrame) -> DataFrame:
     """REAL dictionary-coded image decode: GIF payload → exact pixel
     stats through a full LZW inflate (variable-width codes, table
     resets, the cScSc case) — a different entropy-coding family from
-    PNG's DEFLATE.  Same mapInPandas stage shape as every decoder."""
-
-    def decode(payload: bytes):
-        import numpy as np
-
-        w, h, raster = _parse_gif(payload)
-        a = np.frombuffer(raster, dtype=np.uint8)
-        return (
-            w,
-            h,
-            len(raster),
-            int(a.sum(dtype=np.int64)),
-            int(a.min()),
-            int(a.max()),
-        )
-
-    return _payload_stats(media, _GIF_STATS_SCHEMA, decode)
+    PNG's DEFLATE.  Same chainable stats-UDF stage as every grayscale
+    decoder."""
+    return _gray_stats(media, _parse_gif)
 
 
 # --------------------------------------------------------------------
@@ -1652,18 +1505,6 @@ def decode_gif(media: DataFrame) -> DataFrame:
 # stats from ids alone — same doctrine as the PNG/GIF oracles.
 # Arbitrary rasters go through the same code path with the usual
 # bounded lossy error (fuzz-covered in tests/test_codec_fuzz.py).
-
-_JPEG_STATS_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("n_pixels", LongType()),
-        StructField("px_sum", LongType()),
-        StructField("px_min", LongType()),
-        StructField("px_max", LongType()),
-    ]
-)
 
 # Zigzag scan order: entry k is the (row, col) visited k-th.  Built
 # by walking the anti-diagonals (even diagonals run up-right, odd run
@@ -1943,8 +1784,7 @@ def synthesize_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     encoder (real FDCT; arbitrary rasters produce valid lossy JPEGs,
     fuzz-covered)."""
 
-    @F.pandas_udf(BinaryType())
-    def _jpeg(ids: pd.Series) -> pd.Series:
+    def encode(ids: pd.Series) -> list[bytes]:
         out = []
         for mid in ids:
             mid = int(mid)
@@ -1958,16 +1798,9 @@ def synthesize_jpeg(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                         row0 = (by * 8 + r) * w + bx * 8
                         raster[row0 : row0 + 8] = bytes([v]) * 8
             out.append(_jpeg_encode_raster(w, h, bytes(raster)))
-        return pd.Series(out)
+        return out
 
-    return spread(
-        df.select(id_col),
-        min_bytes_per_task=_SPREAD_PY_MIN_BYTES_PER_TASK,
-    ).select(
-        F.col(id_col).cast("long").alias("media_id"),
-        _jpeg(F.col(id_col)).alias("payload"),
-        F.lit("image/jpeg").alias("media_type"),
-    ).withColumn("byte_len", F.octet_length("payload").cast("long"))
+    return _synthesized(df, id_col, encode, "image/jpeg")
 
 
 def _jpeg_unstuff_entropy(
@@ -2328,7 +2161,7 @@ def _parse_jpeg(data: bytes) -> tuple[int, int, bytes]:
 def _jpeg_rasters_batch(payloads: list[bytes]) -> list["object"]:
     """Decode MANY JFIF payloads sharing one numpy IDCT pass; returns
     per-image (h, w) uint8 rasters.  The batch-aware twin of calling
-    :func:`_parse_jpeg` per image (identical bytes, one einsum)."""
+    :func:`_parse_jpeg` per image (identical bytes, one GEMM pair)."""
     parsed = [_jpeg_header_and_blocks(p) for p in payloads]
     if not parsed:
         return []
@@ -2345,38 +2178,12 @@ def decode_jpeg(media: DataFrame) -> DataFrame:
     entropy decode, dequantization and a genuine float IDCT — the
     third entropy-coding family in the suite and the first lossy
     pipeline (exactly invertible on the block-constant fixture
-    corpus, boundedly lossy on arbitrary input).  Spelled as the
-    shared chainable batch-stats UDF (r12): JPEG stats are 1:1 per
-    payload, so the decode fuses with the synthesizer into ONE
-    ArrowEvalPython node — the r11 mapInPandas spelling kept a second
-    Python boundary that round-tripped every payload through the JVM
-    and was the bench's only real regression.  The per-batch body is
-    unchanged: sequential halves per image, then ONE numpy IDCT pass
-    for the whole Arrow batch; the stats are block-order-independent,
-    so no raster assembly at all."""
-
-    def batch(payloads: list[bytes]) -> list[list]:
-        widths: list[int] = []
-        heights: list[int] = []
-        n_pixels: list[int] = []
-        px_sum: list[int] = []
-        px_min: list[int] = []
-        px_max: list[int] = []
-        parsed = [_jpeg_header_and_blocks(p) for p in payloads]
-        if parsed:
-            blocks_u8, off = _jpeg_pixel_blocks_batch(parsed)
-            flat = blocks_u8.reshape(-1)
-            for i, (w, h, _, _) in enumerate(parsed):
-                seg = flat[off[i] * 64 : off[i + 1] * 64]
-                widths.append(w)
-                heights.append(h)
-                n_pixels.append(int(seg.size))
-                px_sum.append(int(seg.sum()))
-                px_min.append(int(seg.min()))
-                px_max.append(int(seg.max()))
-        return [widths, heights, n_pixels, px_sum, px_min, px_max]
-
-    return _payload_stats_batch(media, _JPEG_STATS_SCHEMA, batch)
+    corpus, boundedly lossy on arbitrary input).  Same chainable
+    stats-UDF stage as every grayscale decoder, so the decode fuses
+    with the synthesizer into ONE ArrowEvalPython node; the sequential
+    halves run per image, then ONE numpy IDCT pass covers the whole
+    Arrow batch (:func:`_gray_rasters`)."""
+    return _gray_stats(media, _parse_jpeg)
 
 
 # --------------------------------------------------------------------
@@ -2408,52 +2215,20 @@ def wav_frame_features(media: DataFrame, frame_len: int = 160) -> DataFrame:
     ((prev < 0) != (cur < 0), within-frame only), ``peak`` = max |s|.
     160 samples = 20 ms at 8 kHz, the standard VAD frame."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    def feats(payload: bytes):
+        _, n, a = _pcm16(payload, "wav_frame_features")
+        nf = n // frame_len
+        # Vectorized per-frame features (guide §4.2): one
+        # (nf, frame_len) int64 view computes Σs², the within-frame
+        # sign-alternation count, and max |s| for EVERY frame at once.
+        a = a[: nf * frame_len].reshape(nf, frame_len)
+        neg = a < 0
+        return zip(
+            range(nf),
+            [nf] * nf,
+            (a * a).sum(axis=1).tolist(),
+            (neg[:, 1:] != neg[:, :-1]).sum(axis=1).tolist(),
+            abs(a).max(axis=1).tolist(),
+        )
 
-        import numpy as np
-
-        for pdf in batches:
-            rows = {k.name: [] for k in _WAV_FRAME_SCHEMA.fields}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    ch, width, n = (
-                        w.getnchannels(),
-                        w.getsampwidth(),
-                        w.getnframes(),
-                    )
-                    if ch != 1 or width != 2:
-                        raise ValueError(
-                            f"wav_frame_features: media {media_id} is "
-                            f"{ch}ch/{8 * width}-bit; only mono PCM16"
-                        )
-                    frames_b = w.readframes(n)
-                nf = n // frame_len
-                if not nf:
-                    continue
-                # Vectorized per-frame features (guide §4.2): one
-                # (nf, frame_len) int64 view computes Σs², the
-                # within-frame sign-alternation count, and max |s| for
-                # EVERY frame at once — exact integers, identical to
-                # the former per-sample generator expressions.
-                a = (
-                    np.frombuffer(frames_b, dtype="<i2")[
-                        : nf * frame_len
-                    ]
-                    .astype(np.int64)
-                    .reshape(nf, frame_len)
-                )
-                neg = a < 0
-                energy = (a * a).sum(axis=1)
-                zcr = (neg[:, 1:] != neg[:, :-1]).sum(axis=1)
-                peak = np.abs(a).max(axis=1)
-                rows["media_id"].extend([media_id] * nf)
-                rows["frame_idx"].extend(range(nf))
-                rows["n_frames"].extend([nf] * nf)
-                rows["energy"].extend(int(v) for v in energy)
-                rows["zcr"].extend(int(v) for v in zcr)
-                rows["peak"].extend(int(v) for v in peak)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(feats, schema=_WAV_FRAME_SCHEMA)
+    return _payload_rows(media, _WAV_FRAME_SCHEMA, feats)

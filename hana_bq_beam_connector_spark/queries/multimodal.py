@@ -151,7 +151,7 @@ def mm_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS channels
     FROM documents
     """,
-    doc="REAL header decode (mapInPandas): a three-format payload "
+    doc="REAL header decode (pandas UDF): a three-format payload "
     "mix — PGM for doc_id%3=0, PNG for =1, GIF for =2 — flows "
     "through ONE decode stage that sniffs each payload's magic "
     "bytes and parses width/height/channels from the format's own "
@@ -283,7 +283,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "encoder, parser, and the resize kernel jointly.  This retires "
     "the round-6 'resize is a hash stub' caveat — the PIL.resize "
     "slot now runs on rasters.  100 TB shape: zero-shuffle "
-    "mapInPandas scan, vectorized numpy per Arrow batch.",
+    "pandas-UDF scan, vectorized numpy per Arrow batch.",
 )
 def mm_resize_box_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hana_bq_beam_connector_spark.operators.multimodal import resize_box
@@ -372,7 +372,7 @@ def mm_feature_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # encode ONCE: the query and candidate sides both read the encoder
     # output, and without materialization each side re-runs the Python
-    # mapInPandas stage — at scale that doubles the single most
+    # UDF stage — at scale that doubles the single most
     # expensive step of the pipeline (the model forward pass).
     feats = persist_reused(
         raster_hist_features(synthesize_pgm(d), bins=_FEAT_DIM)
@@ -754,7 +754,7 @@ def mm_wav_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the identity, so each 8x8 block contributes 64 copies of "
     "v(b) = (id*31 + b*17) % 256 and the oracle replays every moment "
     "from doc_id alone — proving codec AND featurizer jointly.  "
-    "100 TB shape: zero-shuffle mapInPandas scan; features are "
+    "100 TB shape: zero-shuffle pandas-UDF scan; features are "
     "O(1) per image, rasters never leave the scanning task.",
 )
 def mm_jpeg_raster_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,7 +801,7 @@ def mm_jpeg_raster_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fixture's s(i) formula; a playback path would shift right by 1 "
     "bit).  Ragged tails crop, the nominal rate halves — the "
     "16 kHz→8 kHz shape of a speech-pipeline ingest stage.  100 TB "
-    "shape: zero-shuffle mapInPandas scan, vectorized reshape-sum "
+    "shape: zero-shuffle pandas-UDF scan, vectorized reshape-sum "
     "kernel, 7 small ints per clip leave the task.",
 )
 def mm_wav_downsample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,7 +884,7 @@ def mm_wav_downsample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "normalize fold → rank) — the end-to-end proof that decode → "
     "resize → featurize → ANN runs on real pixels at every stage "
     "(retires the round-6 'fake pixels in the middle stages' "
-    "finding).  100 TB shape: one mapInPandas chain per batch, "
+    "finding).  100 TB shape: one chained pandas-UDF stage per batch, "
     "encode-once persist, broadcast query side.",
 )
 def mm_resized_feature_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

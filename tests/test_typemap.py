@@ -149,6 +149,40 @@ def test_catalog_to_schema_orders_by_position():
     assert schema.fields[1].dataType == LongType()
 
 
+def test_schema_from_catalog_df_keeps_decimal_precision(spark):
+    """TABLE_COLUMNS rows → StructType: fixed-point DECIMAL keeps its
+    catalog LENGTH/SCALE (a (38,18) fallback on a DECIMAL(38,0) key
+    keeps only 20 integer digits), a floating DECIMAL (null SCALE)
+    and non-decimal types keep the type map, POSITION sets the order."""
+    from hana_bq_beam_connector_spark.sources.catalog import (
+        schema_from_catalog_df,
+    )
+
+    catalog = spark.createDataFrame(
+        [
+            ("T", "amount", "DECIMAL", 2, 12, 2),
+            ("T", "id", "DECIMAL", 1, 38, 0),
+            ("T", "ratio", "DECIMAL", 4, 34, None),
+            ("T", "name", "NVARCHAR", 3, 50, None),
+            ("G", "shape", "ST_GEOMETRY", 1, None, None),
+        ],
+        "TABLE_NAME string, COLUMN_NAME string, DATA_TYPE_NAME string, "
+        "POSITION int, LENGTH int, SCALE int",
+    )
+    assert schema_from_catalog_df(catalog, "T") == StructType(
+        [
+            StructField("id", DecimalType(38, 0)),
+            StructField("amount", DecimalType(12, 2)),
+            StructField("name", StringType()),
+            StructField("ratio", DecimalType(38, 18)),
+        ]
+    )
+    with pytest.raises(ValueError, match="not found"):
+        schema_from_catalog_df(catalog, "MISSING")
+    with pytest.raises(UnknownHanaTypeError):
+        schema_from_catalog_df(catalog, "G")
+
+
 def test_stringify_parity(spark):
     df = spark.createDataFrame(
         [Row(a=1, b="x"), Row(a=2, b="NULL"), Row(a=None, b="null")]
